@@ -20,11 +20,16 @@ from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.registry import register
 from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.sources.loader import broadcast_threshold
 
 #: damping factor + fixed iteration count (diameter of the bipartite
 #: purchase graph is tiny; 8 rounds is well past convergence there)
 DAMPING = 0.85
 N_ITER = 8
+#: bytes a node adds to the broadcast ranks relation, measured from
+#: BroadcastExchange's dataSize: 4.26 MB at 1.6k nodes (sf0.01), 4.72 MB
+#: at 16k (sf0.1)
+RANK_ROW_BYTES = 32
 
 
 def purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,19 +113,22 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the full edge relation and re-joined it EVERY round — the
     # degree never changes, so join it once into the pinned edge
     # relation. Each round then joins only the node-sized ranks,
-    # broadcast (the graph's node set is dimension-bounded —
-    # |customers|+|suppliers|, never corpus-sized), so no round
-    # re-shuffles the edge relation at all; the only per-round
-    # exchange is the node-sized inflow aggregation.
+    # broadcast while the n_nodes ranks fit the broadcast threshold
+    # (|customers|+|suppliers| grows with the scale factor), so no
+    # round re-shuffles the edge relation. Spark's own estimate of
+    # ranks cannot make this call: it is a join product (32.8 GB at
+    # sf0.01). Above the threshold a plain join, left to AQE.
     edges2 = (
         edges.join(out_deg, "src")
         .select("src", "dst", "deg")
         .localCheckpoint(eager=True)
     )
+    broadcast = n_nodes * RANK_ROW_BYTES <= broadcast_threshold(spark)
     ranks = nodes.select("node", F.lit(1.0).alias("rank"))
     for it in range(N_ITER):
+        rhs = F.broadcast(ranks) if broadcast else ranks
         contrib = (
-            edges2.join(F.broadcast(ranks), edges2.src == ranks.node)
+            edges2.join(rhs, edges2.src == rhs.node)
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
         )
         ranks = (

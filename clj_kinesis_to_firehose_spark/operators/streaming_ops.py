@@ -6,10 +6,26 @@ those get exact oracles since the replay is deterministic.
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.registry import register
+from clj_kinesis_to_firehose_spark.sources import load_table, scratch_dir
 from clj_kinesis_to_firehose_spark.streaming import pipelines
+from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
+    COUNTERS_SCHEMA,
+    DeadLetterDir,
+    LocalDirFirehoseClient,
+    deliver_frame,
+    deliver_records,
+    delivery_kernel,
+    gzip_payload,
+    newline_terminate,
+    serialize,
+)
 
 
 @register(
@@ -279,10 +295,7 @@ def sink_firehose_format_conversion(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "sink_firehose_batched",
-    # rdd.toDF([...]) schema inference runs rdd.first() — a real job
-    # that executes a partition's Firehose delivery at build time
-    # (r12 review finding; this op was in the old hand-maintained lint
-    # skip set for exactly this reason)
+    # deliver_frame delivers eagerly, at build
     executes_on_build=True,
     oracle="""
     SELECT event_type AS stream, COUNT(*) AS n_delivered
@@ -291,8 +304,8 @@ def sink_firehose_format_conversion(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def sink_firehose_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 standalone (batch form): serialize events to JSON-lines and
-    deliver through the PutRecordBatch chunker per partition; returns
-    the per-partition delivery audit (weak: asserts live in
+    deliver through the PutRecordBatch chunker; returns the delivery
+    kernel's own counters per stream (weak: asserts live in
     tests/test_firehose_sink.py — every batch ≤500 records/≤4 MiB,
     at-least-once counts equal input).
 
@@ -300,49 +313,18 @@ def sink_firehose_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Firehose service quotas with per-record retry. The streaming
     composition is stream_foreachbatch_sink.
     """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from clj_kinesis_to_firehose_spark.sources import load_table
-    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
-        LocalDirFirehoseClient,
-        deliver_records,
+    out_dir = scratch_dir("kf_sink_a6_")
+    kernel = delivery_kernel(
+        functools.partial(LocalDirFirehoseClient, out_dir), "batch"
     )
-
-    out_dir = tempfile.mkdtemp(prefix="kf_sink_a6_")
-    ev = load_table(spark, sf_dir, "events")
-    serialized = ev.select(
-        F.col("event_type").alias("__stream"),
-        F.to_json(F.struct(*ev.columns)).alias("__payload"),
-    )
-
-    def per_partition(rows):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        client = LocalDirFirehoseClient(out_dir)
-        by_stream: dict[str, list[bytes]] = {}
-        for row in rows:
-            by_stream.setdefault(row["__stream"], []).append(
-                row["__payload"].encode("utf-8")
-            )
-        for stream, records in by_stream.items():
-            stats = deliver_records(
-                records,
-                client,
-                stream,
-                sleep=lambda s: None,
-                idempotency_prefix=f"batch-p{pid}-{stream}",
-            )
-            yield (stream, pid, stats["n_records"], stats["n_batches"])
-
-    delivered = serialized.rdd.mapPartitions(per_partition).toDF(
-        ["stream", "partition_id", "n_records", "n_batches"]
-    )
+    counters = deliver_frame(load_table(spark, sf_dir, "events"), "event_type", kernel)
     # delivered-record counts are deterministic (exact oracle); batch
     # counts depend on partitioning and are audited in tests instead
-    return delivered.groupBy("stream").agg(F.sum("n_records").alias("n_delivered"))
+    return (
+        spark.createDataFrame(counters, COUNTERS_SCHEMA)
+        .groupBy("stream")
+        .agg(F.sum("n_records").alias("n_delivered"))
+    )
 
 
 @register(
@@ -362,47 +344,14 @@ def sink_firehose_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT oracle: per-stream counts of the records read back FROM THE
     COMPRESSED FILES equal the source. Cap invariants on compressed
     sizes are pinned in tests/test_firehose_sink.py."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from clj_kinesis_to_firehose_spark.sources import load_table
-    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
-        LocalDirFirehoseClient,
-        deliver_records,
-        gzip_payload,
-        newline_terminate,
+    out_dir = scratch_dir("kf_sink_gz_")
+    kernel = delivery_kernel(
+        functools.partial(LocalDirFirehoseClient, out_dir, compression="gzip"),
+        "gz",
+        # opaque gzip members: no newline framing around them
+        codec=lambda p: gzip_payload(newline_terminate(p)),
     )
-
-    out_dir = tempfile.mkdtemp(prefix="kf_sink_gz_")
-    ev = load_table(spark, sf_dir, "events")
-    serialized = ev.select(
-        F.col("event_type").alias("__stream"),
-        F.to_json(F.struct(*ev.columns)).alias("__payload"),
-    )
-
-    def per_partition(rows):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        client = LocalDirFirehoseClient(out_dir, compression="gzip")
-        by_stream: dict[str, list[bytes]] = {}
-        for row in rows:
-            by_stream.setdefault(row["__stream"], []).append(
-                gzip_payload(newline_terminate(row["__payload"].encode("utf-8")))
-            )
-        for stream, records in by_stream.items():
-            deliver_records(
-                records,
-                client,
-                stream,
-                sleep=lambda s: None,
-                idempotency_prefix=f"gz-p{pid}-{stream}",
-                binary=True,  # opaque gzip members: no newline framing
-            )
-
-    serialized.foreachPartition(per_partition)
+    deliver_frame(load_table(spark, sf_dir, "events"), "event_type", kernel)
     return (
         spark.read.json(os.path.join(out_dir, "*.jsonl.gz"))
         .groupBy(F.col("event_type").alias("stream"))
@@ -429,50 +378,16 @@ def sink_firehose_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint replay. The audit is physical, not counter-based: the
     delivered and dead-letter files are read back, and
     delivered + dead must equal the source exactly, per stream."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from clj_kinesis_to_firehose_spark.sources import load_table
-    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
-        DeadLetterDir,
-        LocalDirFirehoseClient,
-        deliver_records,
+    out_dir = scratch_dir("kf_sink_dlq_")
+    kernel = delivery_kernel(
+        functools.partial(
+            LocalDirFirehoseClient, out_dir, poison_marker=b'"event_type":"error"'
+        ),
+        "dlq",
+        dead_letter=DeadLetterDir(out_dir),
+        max_retries=2,
     )
-
-    out_dir = tempfile.mkdtemp(prefix="kf_sink_dlq_")
-    ev = load_table(spark, sf_dir, "events")
-    serialized = ev.select(
-        F.col("event_type").alias("__stream"),
-        F.to_json(F.struct(*ev.columns)).alias("__payload"),
-    )
-
-    def per_partition(rows):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        client = LocalDirFirehoseClient(
-            out_dir, poison_marker=b'"event_type":"error"'
-        )
-        dead_letter = DeadLetterDir(out_dir)
-        by_stream: dict[str, list[bytes]] = {}
-        for row in rows:
-            by_stream.setdefault(row["__stream"], []).append(
-                row["__payload"].encode("utf-8")
-            )
-        for stream, records in by_stream.items():
-            deliver_records(
-                records,
-                client,
-                stream,
-                max_retries=2,
-                sleep=lambda s: None,
-                idempotency_prefix=f"dlq-p{pid}-{stream}",
-                dead_letter=dead_letter,
-            )
-
-    serialized.foreachPartition(per_partition)
+    deliver_frame(load_table(spark, sf_dir, "events"), "event_type", kernel)
     delivered = (
         spark.read.json(os.path.join(out_dir, "*.jsonl"))
         .groupBy(F.col("event_type").alias("stream"))
@@ -516,30 +431,18 @@ def sink_firehose_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     is physical: delivered counts and the transformed-field sum are
     read back from the batch files, failures from the DLQ, drops
     reconciled against the source."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from clj_kinesis_to_firehose_spark.sources import load_table
-    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
-        DeadLetterDir,
-        LocalDirFirehoseClient,
-        deliver_records,
-    )
-
-    out_dir = tempfile.mkdtemp(prefix="kf_sink_xform_")
+    out_dir = scratch_dir("kf_sink_xform_")
     ev = load_table(spark, sf_dir, "events")
-    serialized = ev.select(
-        F.col("event_type").alias("__stream"),
-        F.col("value").alias("__value"),
-        F.to_json(F.struct(*ev.columns)).alias("__orig"),
-        F.to_json(
+    serialized = serialize(
+        ev,
+        "event_type",
+        __value=F.col("value"),
+        __transformed=F.to_json(
             F.struct(
                 "event_id", "user_id", "event_type",
                 F.round(F.col("value") * 100).cast("long").alias("value_cents"),
             )
-        ).alias("__transformed"),
+        ),
     )
 
     def per_partition(rows):
@@ -551,9 +454,9 @@ def sink_firehose_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         ok: dict[str, list[bytes]] = {}
         failed: dict[str, list[bytes]] = {}
         for row in rows:
-            if row["__stream"] == "error":  # ProcessingFailed
+            if row["__stream"] == "error":  # ProcessingFailed: original payload
                 failed.setdefault(row["__stream"], []).append(
-                    (row["__orig"] + "\n").encode("utf-8")
+                    bytes(row["__payload"]) + b"\n"
                 )
             elif row["__value"] < 1.0:  # Dropped
                 continue
@@ -618,75 +521,35 @@ def sink_firehose_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped/batched/idempotent path; consumed DLQ files are removed
     only after their records deliver. EXACT oracle: post-redrive,
     EVERY source record (including the previously-poisoned ones) is
-    delivered exactly once and the DLQ is empty. Redrive is
-    distributed — the DLQ is read as an ordinary text source and
-    delivered per partition, no driver-side record loop."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from clj_kinesis_to_firehose_spark.sources import load_table
-    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
-        DeadLetterDir,
-        LocalDirFirehoseClient,
-        deliver_records,
-    )
-
-    out_dir = tempfile.mkdtemp(prefix="kf_sink_redrive_")
+    delivered exactly once and the DLQ is empty. Both phases run the
+    bridge's delivery kernel (``deliver_frame``): the DLQ is read as an
+    ordinary text source and placed by its size like any micro-batch."""
+    out_dir = scratch_dir("kf_sink_redrive_")
     ev = load_table(spark, sf_dir, "events")
-    serialized = ev.select(
-        F.col("event_type").alias("__stream"),
-        F.to_json(F.struct(*ev.columns)).alias("__payload"),
-    )
 
     # phase 1: delivery with 'error' payloads permanently failing
-    def per_partition(rows):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        client = LocalDirFirehoseClient(
-            out_dir, poison_marker=b'"event_type":"error"'
-        )
-        dead_letter = DeadLetterDir(out_dir)
-        by_stream: dict[str, list[bytes]] = {}
-        for row in rows:
-            by_stream.setdefault(row["__stream"], []).append(
-                row["__payload"].encode("utf-8")
-            )
-        for stream, records in by_stream.items():
-            deliver_records(
-                records, client, stream, max_retries=1, sleep=lambda s: None,
-                idempotency_prefix=f"rd-p{pid}-{stream}", dead_letter=dead_letter,
-            )
-
-    serialized.foreachPartition(per_partition)
-
-    # phase 2: fault cleared — redrive the DLQ distributed, then
-    # remove consumed DLQ files (driver-side metadata op only)
-    err_dir = os.path.join(out_dir, "errors")
-    dlq = spark.read.text(os.path.join(err_dir, "*.jsonl")).select(
-        F.get_json_object("value", "$.event_type").alias("__stream"),
-        F.col("value").alias("__payload"),
+    poisoned = delivery_kernel(
+        functools.partial(
+            LocalDirFirehoseClient, out_dir, poison_marker=b'"event_type":"error"'
+        ),
+        "rd",
+        dead_letter=DeadLetterDir(out_dir),
+        max_retries=1,
     )
+    deliver_frame(ev, "event_type", poisoned)
 
-    def redrive(rows):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        client = LocalDirFirehoseClient(out_dir)  # healthy again
-        by_stream: dict[str, list[bytes]] = {}
-        for row in rows:
-            by_stream.setdefault(row["__stream"], []).append(
-                row["__payload"].encode("utf-8")
-            )
-        for stream, records in by_stream.items():
-            deliver_records(
-                records, client, stream, sleep=lambda s: None,
-                idempotency_prefix=f"redrive-p{pid}-{stream}",
-            )
-
-    dlq.foreachPartition(redrive)
+    # phase 2: fault cleared — redrive the DLQ, read as an ordinary
+    # text source, then remove consumed DLQ files (driver-side metadata
+    # op only)
+    err_dir = os.path.join(out_dir, "errors")
+    dlq = spark.read.text(os.path.join(err_dir, "*.jsonl"))
+    healthy = delivery_kernel(functools.partial(LocalDirFirehoseClient, out_dir), "redrive")
+    deliver_frame(
+        dlq,
+        F.get_json_object("value", "$.event_type"),
+        healthy,
+        payload=F.col("value"),
+    )
     # the redrive action raises on any undelivered record, so reaching
     # this point means every DLQ record landed — consume the files
     for name in os.listdir(err_dir):
@@ -817,8 +680,6 @@ def stream_pyds_connector_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from clj_kinesis_to_firehose_spark.sources.pyds import (
         register_delivery_sink,
         register_replay_source,
@@ -886,7 +747,6 @@ def stream_source_faults(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass per event_type, no duplicate and no dropped record. Retry
     counts, backoff capping, and give-up-after-N are pinned separately
     in tests/test_source_faults.py."""
-    from pyspark.sql import functions as F
 
     from clj_kinesis_to_firehose_spark.sources.pyds import (
         register_replay_source,

@@ -262,18 +262,21 @@ def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale killer, 26 s at sf0.1 and unbounded at 100 TB); bucketed
     cogroup amortizes the call cost over ~4 MB of input per call and
     vectorizes the stats inside the bucket. The bucket key is
-    pmod(xxhash64(key), B) — deterministic under task retry (guide
+    pmod(xxhash64(long(key)), B) — deterministic under task retry (guide
     §2.5), with B derived from input size, not the local core count."""
     customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
     nb = _cogroup_buckets(spark, customer, orders)
+    # hash the key as a long on both sides: xxhash64 depends on the
+    # input type, so an int key on one side and a long on the other
+    # would land the same customer in different buckets
     b_cust = customer.withColumn(
-        "b", F.pmod(F.xxhash64("c_custkey"), F.lit(nb))
+        "b", F.pmod(F.xxhash64(F.col("c_custkey").cast("long")), F.lit(nb))
     )
     b_ord = orders.withColumn(
-        "b", F.pmod(F.xxhash64("o_custkey"), F.lit(nb))
+        "b", F.pmod(F.xxhash64(F.col("o_custkey").cast("long")), F.lit(nb))
     )
     out = (
         b_cust.groupBy("b")

@@ -113,6 +113,12 @@ def _parse_byte_size(raw: str) -> int:
     return int(s) * mult
 
 
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes; -1 when
+    broadcasting is disabled."""
+    return _parse_byte_size(str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold")))
+
+
 def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Round-robin repartition to core count when a scan arrives with
     fewer partitions — the local-fixture mitigation for single-file
@@ -185,6 +191,25 @@ def input_bytes(df) -> int:
         except OSError:
             return -1
     return total
+
+
+def estimated_bytes(df) -> int:
+    """Spark's own size estimate of ``df`` (its optimized plan's
+    ``sizeInBytes``), or -1 when unknown. Same contract as
+    :func:`input_bytes`: callers MUST treat -1 as 'large'. Sources that
+    report no statistics (the rate source, Python DataSources) estimate
+    ``Long.MaxValue``, which reads as -1 here. Unlike ``input_bytes``
+    this needs no file listing, so it also sizes a ``foreachBatch``
+    micro-batch, whose ``inputFiles()`` is empty: the micro-batch plan
+    carries the statistics of the plan it was cut from."""
+    from py4j.protocol import Py4JError
+
+    try:
+        # py4j returns the Scala BigInt as a Python int or as a proxy
+        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
+        return -1
+    return est if est < 2**63 - 1 else -1
 
 
 def prior_epoch_paths(

@@ -12,14 +12,20 @@ reference existed to honor, public AWS docs — BASELINE.md):
   subset, with capped backoff
 * payloads are newline-terminated so Firehose→S3 output is JSON-lines
 
-The chunker and retry loop are pure Python over one partition's
-records (driver-free, executor-local); the client is pluggable — a
-local directory double here, the real ``boto3`` Firehose client in
+The chunker and retry loop are pure Python; :func:`delivery_kernel`
+runs them over Arrow batches of :func:`serialize` frames, and
+:func:`deliver_frame` places that kernel by Spark's size estimate of
+the input: a micro-batch estimated at most ``MAX_BATCH_BYTES`` (one
+PutRecordBatch call) is collected as Arrow and delivered in the driver,
+anything larger or of unknown size is delivered by the executors
+(``mapInArrow``). Both write the same files. The client is pluggable —
+a local directory double here, the real ``boto3`` Firehose client in
 production (same interface, config-level swap).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -258,6 +264,117 @@ def deliver_records(
     }
 
 
+#: the kernel's output: one row of ``deliver_records`` counters per
+#: (input partition, stream)
+COUNTERS = ("n_records", "n_batches", "n_retried", "n_dead")
+COUNTERS_SCHEMA = "partition_id int, stream string, " + ", ".join(
+    f"{c} long" for c in COUNTERS
+)
+
+
+def serialize(df, stream, payload=None, **extra):
+    """The bridge's record frame of ``df``: ``__pid`` (the input
+    partition the record was read in), ``__stream`` (``stream``, a
+    column or column name) and ``__payload`` (bytes; by default the
+    JSON rendering of the whole row, built in the JVM), plus ``extra``
+    columns under their keyword names."""
+    from pyspark.sql import functions as F
+
+    if payload is None:
+        payload = F.to_json(F.struct(*df.columns))
+    return df.select(
+        F.spark_partition_id().alias("__pid"),
+        (F.col(stream) if isinstance(stream, str) else stream).alias("__stream"),
+        payload.cast("binary").alias("__payload"),
+        *[col.alias(name) for name, col in extra.items()],
+    )
+
+
+def delivery_kernel(
+    client_factory: Callable[[], FirehoseClient],
+    idempotency_tag: str,
+    dead_letter: Callable[..., None] | None = None,
+    max_retries: int = 5,
+    codec: Callable[[bytes], bytes] | None = None,
+):
+    """THE delivery kernel: a ``mapInArrow`` function over Arrow
+    batches of :func:`serialize` frames. It groups the records per
+    (input partition, stream) in arrival order, delivers each group
+    with :func:`deliver_records` under the idempotency prefix
+    ``{idempotency_tag}-p{partition}`` through one client per input
+    partition, and yields the counters as :data:`COUNTERS_SCHEMA` rows.
+    Keying by the input partition, not the task running the kernel,
+    makes the delivered files the same wherever the kernel runs.
+
+    ``codec`` re-encodes each payload as an opaque binary record (e.g.
+    client-side gzip), delivered without newline framing."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        groups: dict[tuple[int, str], list[bytes]] = {}
+        for batch in batches:
+            columns = [batch.column(c).to_pylist() for c in ("__pid", "__stream", "__payload")]
+            for pid, stream, payload in zip(*columns):
+                groups.setdefault((pid, stream), []).append(payload)
+        clients: dict[int, FirehoseClient] = {}
+        counters = []
+        for (pid, stream), records in groups.items():
+            if codec is not None:
+                records = [codec(r) for r in records]
+            stats = deliver_records(
+                records,
+                clients.setdefault(pid, client_factory()),
+                stream,
+                max_retries=max_retries,
+                sleep=lambda s: None,
+                idempotency_prefix=f"{idempotency_tag}-p{pid}",
+                dead_letter=dead_letter,
+                binary=codec is not None,
+            )
+            counters.append({"partition_id": pid, "stream": stream, **stats})
+        schema = pa.schema(
+            [("partition_id", pa.int32()), ("stream", pa.string())]
+            + [(c, pa.int64()) for c in COUNTERS]
+        )
+        yield pa.RecordBatch.from_pylist(counters, schema=schema)
+
+    return kernel
+
+
+def deliver_frame(df, stream, kernel, payload=None) -> list[dict]:
+    """Deliver every record of ``df`` through ``kernel`` and return its
+    counter rows; ``stream`` and ``payload`` as in :func:`serialize`.
+
+    Placement by Spark's estimate of ``df`` (``estimated_bytes``). At
+    most ``MAX_BATCH_BYTES``, the records are collected as one Arrow
+    table and delivered in the driver, so a small micro-batch starts no
+    job with a Python stage. Larger or unknown (-1: sources without
+    statistics) runs the kernel on the executors with ``mapInArrow``,
+    partitioned as ``df``. Both placements write the same files, since
+    the kernel keys them by the input partition.
+
+    The 4 MiB limit bounds driver memory; it is not a measured speed
+    crossover. It bounds what Spark estimates, which for a file source
+    is the bytes on disk × ``spark.sql.sources.fileCompressionFactor``
+    (default 1.0). The driver holds the decoded records: the Arrow
+    table and one Python ``bytes`` copy of each payload, measured at
+    2.2× the payload bytes. So its peak is the estimate × the input's
+    decoded/stored ratio × 2.2. That ratio is 1.67 for the event slices
+    of ``perfbench/`` but unbounded for repetitive data: a column of one
+    repeated 32 KiB string stores 2000 rows in 14 KB and decodes to 66
+    MB. Raise the compression factor for such inputs."""
+    from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes
+
+    serialized = serialize(df, stream, payload)
+    if 0 <= estimated_bytes(df) <= MAX_BATCH_BYTES:
+        batches = serialized.toArrow().to_batches()
+        return [r for b in kernel(batches) for r in b.to_pylist()]
+    return [
+        r.asDict() for r in serialized.mapInArrow(kernel, COUNTERS_SCHEMA).collect()
+    ]
+
+
 def firehose_foreach_batch(
     out_dir: str,
     stream_name_col: str = "event_type",
@@ -269,10 +386,16 @@ def firehose_foreach_batch(
     route by ``stream_name_col`` → JSON-lines serialize → chunk under
     the PutRecordBatch caps → deliver with per-record retry.
 
-    Runs per partition on executors (``foreachPartition``); batch files
-    are keyed by (epoch, partition) so micro-batch replays after a
-    failure overwrite instead of duplicating — exactly-once with the
-    streaming checkpoint WAL (SURVEY.md §3.4).
+    Each micro-batch goes through :func:`deliver_frame`: at most 4 MiB
+    by Spark's estimate it is delivered in the driver from one Arrow
+    collect, larger or of unknown size on the executors; the driver-
+    memory bound is stated there. Batch files are keyed by (epoch,
+    input partition, chunk, attempt) —
+    ``{stream}-e{epoch}-p{pid}-{chunk}-a{attempt}.jsonl``, dead letters
+    ``errors/{stream}-e{epoch}-p{pid}-{chunk}-dead.jsonl``. A replayed
+    micro-batch has the same input partitions and records, so either
+    placement rewrites the same files instead of duplicating them:
+    exactly-once with the streaming checkpoint WAL (SURVEY.md §3.4).
 
     By default retry-exhausted records divert to ``{out_dir}/errors/``
     (:class:`DeadLetterDir`) and the stream keeps going — Firehose's
@@ -280,38 +403,16 @@ def firehose_foreach_batch(
     here makes the checkpoint replay the same poison micro-batch
     forever. ``strict=True`` restores raise-on-exhaustion.
     """
-    from pyspark.sql import functions as F
+    factory = functools.partial(
+        client_factory or LocalDirFirehoseClient,
+        out_dir,
+        fail_first_attempt_every=fail_first_attempt_every,
+    )
+    dead_letter = None if strict else DeadLetterDir(out_dir)
 
     def handle(batch_df, epoch_id: int) -> None:
-        serialized = batch_df.select(
-            F.col(stream_name_col).alias("__stream"),
-            F.to_json(F.struct(*batch_df.columns)).alias("__payload"),
-        )
-
-        def per_partition(rows):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            factory = client_factory or LocalDirFirehoseClient
-            client = factory(
-                out_dir, fail_first_attempt_every=fail_first_attempt_every
-            )
-            by_stream: dict[str, list[bytes]] = {}
-            for row in rows:
-                by_stream.setdefault(row["__stream"], []).append(
-                    row["__payload"].encode("utf-8")
-                )
-            for stream, records in by_stream.items():
-                deliver_records(
-                    records,
-                    client,
-                    stream,
-                    sleep=lambda s: None,
-                    idempotency_prefix=f"e{epoch_id}-p{pid}",
-                    dead_letter=None if strict else DeadLetterDir(out_dir),
-                )
-
-        serialized.foreachPartition(per_partition)
+        kernel = delivery_kernel(factory, f"e{epoch_id}", dead_letter=dead_letter)
+        deliver_frame(batch_df, stream_name_col, kernel)
 
     return handle
 

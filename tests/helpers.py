@@ -81,7 +81,7 @@ def assert_oracle_match(spark_df, sql: str, con, name: str = "") -> None:
 _DF_ACTIONS = [
     "collect", "toPandas", "count", "first", "head", "take",
     "foreach", "foreachPartition", "localCheckpoint", "checkpoint",
-    "toLocalIterator",
+    "toLocalIterator", "toArrow",
 ]
 _WRITER_ACTIONS = [
     "save", "parquet", "orc", "json", "csv", "text",

@@ -267,10 +267,15 @@ def test_dynamic_partition_pruning_injected(spark):
 
 
 def test_repetition_score_is_pure_scan(spark):
-    # quality scoring must stream out of the scan: no shuffle, no
-    # Python, all array expressions in codegen
+    # quality scoring must stream out of the scan: no Python, all array
+    # expressions in codegen. The one Exchange is fan_out's round-robin
+    # spread of the single-file fixture scan to defaultParallelism.
     df = QUERIES["text_repetition_score"](spark, SF_DIR)
-    assert audit.n_shuffles(df) == 0, audit.plan_report(df)
+    plan = audit.formatted_plan(df)
+    assert audit.n_shuffles(df) == 1, audit.plan_report(df)
+    width = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({width})" in plan, plan
+    assert "Python" not in plan, plan
     assert audit.has_whole_stage_codegen(df)
 
 

@@ -601,3 +601,295 @@ def test_python_datasource_writer_bytes_are_format_pinned(
     )
     assert len(delivered) == len(expected)
     assert delivered == expected
+
+
+# --- the bridge's Arrow delivery kernel, in both placements ----------
+
+#: sha256 over every delivered and dead-lettered file (relative path +
+#: bytes, sorted by path) of the bridge runs below, rendered by the
+#: pickled-Row ``foreachPartition`` sink this kernel replaced, with the
+#: same input, failure injection and poison records
+GOLDEN_DRIVER = "de97cb602d5c265646b883e8ddd9597a8813c14705ac41c0d3645fef618858ad"
+GOLDEN_DISTRIBUTED = "9e4ba47bb6954da702f3166992066b08b709e75ff73d53d4bd2116ba71030f38"
+POISON = b'"event_type":"poison"'
+
+
+def _fixed_replay(spark, root):
+    """A fixed two-slice replay: unicode and escaped props, null
+    values, and a poison record every 97th row. Slice mtimes are
+    stamped so the file source reads them in order."""
+    import glob
+
+    etypes = ["click", "view", "purchase", "search", "signup"]
+    for s in range(2):
+        rows = []
+        for j in range(600):
+            i = s * 600 + j
+            etype = "poison" if i % 97 == 13 else etypes[(i * 7) % 5]
+            value = None if i % 11 == 0 else round(i * 0.37, 2)
+            props = '{"k": %d, "q": "café \\"%s\\"", "pad": "%s"}' % (
+                i, "x" * (i % 5), "y" * (i % 61)
+            )
+            rows.append((i, _ns_to_dt(T0 + i * 37 * NS), i % 17, etype, value, props))
+        path = os.path.join(root, f"slice={s}")
+        spark.createDataFrame(rows, schema=EVENTS_RAW_SCHEMA).coalesce(1).write.parquet(path)
+        for f in glob.glob(os.path.join(path, "*.parquet")):
+            os.utime(f, (1_700_000_000 + s, 1_700_000_000 + s))
+    return root
+
+
+def _bridge_run(spark, source, delivery, spy):
+    """Run ``source`` through the bridge (every 7th record fails its
+    first attempt, poison records fail every attempt) to completion,
+    calling ``spy`` on each micro-batch; returns the sha256 of the
+    delivery directory."""
+    import functools
+    import hashlib
+
+    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
+        LocalDirFirehoseClient,
+        firehose_foreach_batch,
+    )
+
+    handle = firehose_foreach_batch(
+        delivery,
+        fail_first_attempt_every=7,
+        client_factory=functools.partial(LocalDirFirehoseClient, poison_marker=POISON),
+    )
+
+    def sink(batch_df, epoch_id):
+        spy(batch_df)
+        handle(batch_df, epoch_id)
+
+    q = (
+        source.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="kf_chk_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()  # completes: poison records do not wedge it
+    digest = hashlib.sha256()
+    for rel, data in sorted(_snapshot(delivery).items()):
+        digest.update(rel.encode() + b"\0" + data)
+    return digest.hexdigest()
+
+
+def _snapshot(root):
+    """Every file under ``root``: relative path → bytes."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def _assert_poison_only_dead_lettered(delivery, expected):
+    n_dead = 0
+    for rel, data in _snapshot(delivery).items():
+        lines = data.splitlines()
+        if rel.startswith("errors" + os.sep):
+            assert all(POISON in ln for ln in lines), rel
+            n_dead += len(lines)
+        else:
+            assert not any(POISON in ln for ln in lines), rel
+    assert n_dead == expected
+
+
+@pytest.fixture(scope="module")
+def fixed_replay(spark):
+    return _fixed_replay(spark, tempfile.mkdtemp(prefix="kf_fixed_replay_"))
+
+
+def test_bridge_driver_placement_is_byte_identical(spark, fixed_replay):
+    """File-source micro-batches are sized by Spark (the slice file's
+    bytes, far under 4 MiB), so each is delivered in the driver from
+    one Arrow collect — byte for byte what the pickled-Row sink wrote,
+    file names included."""
+    from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes
+    from clj_kinesis_to_firehose_spark.sources.streams import read_event_stream
+    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import MAX_BATCH_BYTES
+
+    delivery = tempfile.mkdtemp(prefix="kf_golden_drv_")
+    sizes = []
+    digest = _bridge_run(
+        spark,
+        read_event_stream(spark, fixed_replay),
+        delivery,
+        spy=lambda df: sizes.append(estimated_bytes(df)),
+    )
+    assert len(sizes) == 2 and all(0 < n <= MAX_BATCH_BYTES for n in sizes), sizes
+    _assert_poison_only_dead_lettered(delivery, 13)  # i % 97 == 13, i < 1200
+    assert digest == GOLDEN_DRIVER
+
+
+def test_bridge_distributed_placement_is_byte_identical(spark, fixed_replay):
+    """The kinesis_replay Python DataSource reports no size, so its
+    micro-batch runs the kernel on the executors (mapInArrow), one task
+    per slice — byte for byte what the pickled-Row sink wrote."""
+    from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes
+    from clj_kinesis_to_firehose_spark.sources.pyds import register_replay_source
+
+    register_replay_source(spark)
+    source = spark.readStream.format("kinesis_replay").option("path", fixed_replay).load()
+    delivery = tempfile.mkdtemp(prefix="kf_golden_dist_")
+    sizes = []
+    digest = _bridge_run(
+        spark, source, delivery, spy=lambda df: sizes.append(estimated_bytes(df))
+    )
+    assert sizes and all(n == -1 for n in sizes), sizes
+    _assert_poison_only_dead_lettered(delivery, 13)  # i % 97 == 13, i < 1200
+    assert digest == GOLDEN_DISTRIBUTED
+
+
+def test_bridge_replayed_epoch_creates_no_new_files(spark, fixed_replay):
+    """Calling the handle again with the same epoch id — a micro-batch
+    replayed after a failure — overwrites its own files, in either
+    placement: same file set, same bytes."""
+    import functools
+
+    from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes
+    from clj_kinesis_to_firehose_spark.sources.pyds import register_replay_source
+    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
+        LocalDirFirehoseClient,
+        firehose_foreach_batch,
+    )
+
+    register_replay_source(spark)
+    small = spark.read.parquet(os.path.join(fixed_replay, "slice=0"))
+    unsized = spark.read.format("kinesis_replay").option("path", fixed_replay).load()
+    assert estimated_bytes(small) > 0 and estimated_bytes(unsized) == -1
+    for df, n_poison in ((small, 7), (unsized, 13)):
+        delivery = tempfile.mkdtemp(prefix="kf_replay_epoch_")
+        handle = firehose_foreach_batch(
+            delivery,
+            fail_first_attempt_every=7,
+            client_factory=functools.partial(LocalDirFirehoseClient, poison_marker=POISON),
+        )
+        snapshots = []
+        for _ in range(2):
+            handle(df, 5)
+            snapshots.append(_snapshot(delivery))
+        assert snapshots[0] and snapshots[1] == snapshots[0]
+        _assert_poison_only_dead_lettered(delivery, n_poison)
+
+
+def test_estimated_bytes_unknown_for_unsized_sources(spark, fixed_replay):
+    """The estimate helper: the file size for a file-source
+    micro-batch, -1 ("unknown", treated as large) for the rate source
+    and the kinesis_replay Python DataSource."""
+    import glob
+
+    from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes
+    from clj_kinesis_to_firehose_spark.sources.pyds import register_replay_source
+    from clj_kinesis_to_firehose_spark.sources.streams import read_event_stream
+
+    register_replay_source(spark)
+    files = sorted(glob.glob(os.path.join(fixed_replay, "slice=*", "*.parquet")))
+    sources = {
+        "file": read_event_stream(spark, fixed_replay),
+        "kinesis_replay": spark.readStream.format("kinesis_replay")
+        .option("path", fixed_replay).load(),
+        "rate": spark.readStream.format("rate").option("rowsPerSecond", 50).load(),
+    }
+    for name, source in sources.items():
+        sizes = []
+
+        def spy(batch_df, epoch_id):
+            if not batch_df.isEmpty():
+                sizes.append(estimated_bytes(batch_df))
+
+        w = source.writeStream.foreachBatch(spy).option(
+            "checkpointLocation", tempfile.mkdtemp(prefix="kf_chk_")
+        )
+        if name == "rate":  # unbounded: stop after the first batch with rows
+            q = w.trigger(processingTime="200 milliseconds").start()
+            deadline = time.time() + 60
+            while not sizes and time.time() < deadline:
+                time.sleep(0.2)
+            q.stop()
+        else:
+            w.trigger(availableNow=True).start().awaitTermination()
+        if name == "file":
+            assert sizes == [os.path.getsize(f) for f in files]
+        else:
+            assert sizes and set(sizes) == {-1}, (name, sizes)
+
+
+def test_bridge_placements_write_the_same_files(spark, fixed_replay, monkeypatch):
+    """A micro-batch read in several partitions delivers the same file
+    names and bytes in either placement: the kernel keys files by the
+    input partition, not by where it runs. So a replay whose placement
+    differs from the first attempt's still overwrites its files."""
+    import functools
+
+    from clj_kinesis_to_firehose_spark.sources import loader
+    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
+        LocalDirFirehoseClient,
+        firehose_foreach_batch,
+    )
+
+    df = spark.read.parquet(fixed_replay)  # one partition per slice file
+    assert df.rdd.getNumPartitions() == 2 and 0 < loader.estimated_bytes(df)
+    snapshots = []
+    for placement in ("driver", "executors"):
+        if placement == "executors":
+            monkeypatch.setattr(loader, "estimated_bytes", lambda df: -1)
+        delivery = tempfile.mkdtemp(prefix=f"kf_placement_{placement}_")
+        handle = firehose_foreach_batch(
+            delivery,
+            fail_first_attempt_every=7,
+            client_factory=functools.partial(LocalDirFirehoseClient, poison_marker=POISON),
+        )
+        handle(df, 3)
+        snapshots.append(_snapshot(delivery))
+        _assert_poison_only_dead_lettered(delivery, 13)
+    assert snapshots[0] == snapshots[1]
+    assert {name.split("-e3-")[1][:2] for name in snapshots[0]} == {"p0", "p1"}
+
+
+def test_compressible_slice_is_placed_by_its_stored_size(spark):
+    """The placement reads Spark's estimate, which for a file source is
+    the stored size: a slice of one long repeated string stores in a
+    few KiB but decodes past 4 MiB, and is still delivered in the
+    driver. Spark's own fileCompressionFactor scales the estimate and
+    moves such a slice to the executors; the delivered files are the
+    same either way."""
+    import functools
+
+    from pyspark.sql import functions as F
+
+    from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes
+    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
+        MAX_BATCH_BYTES,
+        LocalDirFirehoseClient,
+        deliver_frame,
+        delivery_kernel,
+    )
+
+    path = os.path.join(tempfile.mkdtemp(prefix="kf_compressible_"), "slice")
+    spark.range(300).select(
+        F.col("id").alias("event_id"),
+        F.lit("click").alias("event_type"),
+        F.repeat(F.lit("a"), 16 * 1024).alias("props"),
+    ).coalesce(1).write.parquet(path)
+    decoded = 300 * 16 * 1024
+    assert decoded > MAX_BATCH_BYTES
+    stored = estimated_bytes(spark.read.parquet(path))
+    assert 0 < stored < decoded // 100  # driver placement
+    snapshots = []
+    # the second pass sets the factor to this slice's decoded/stored ratio
+    for factor in (1.0, decoded / stored):
+        spark.conf.set("spark.sql.sources.fileCompressionFactor", str(factor))
+        try:
+            df = spark.read.parquet(path)
+            est = estimated_bytes(df)
+            delivery = tempfile.mkdtemp(prefix="kf_compressible_out_")
+            kernel = delivery_kernel(functools.partial(LocalDirFirehoseClient, delivery), "c")
+            counters = deliver_frame(df, "event_type", kernel)
+        finally:
+            spark.conf.unset("spark.sql.sources.fileCompressionFactor")
+        assert (est > MAX_BATCH_BYTES) == (factor > 1.0), (factor, est)
+        assert sum(c["n_records"] for c in counters) == 300
+        snapshots.append(_snapshot(delivery))
+    assert snapshots[0] == snapshots[1]

@@ -15,6 +15,7 @@ bench's own methodology: cold memos, noop sink, wall-clock.
 
 from __future__ import annotations
 
+import ast
 import importlib
 import json
 import os
@@ -44,7 +45,7 @@ def _canary(spark) -> list[float]:
 def main() -> int:
     out_path, qname, modname, attr, a_src, b_src = sys.argv[1:7]
     n = int(sys.argv[7]) if len(sys.argv) > 7 else 5
-    a_val, b_val = eval(a_src), eval(b_src)  # noqa: S307 - operator CLI
+    a_val, b_val = ast.literal_eval(a_src), ast.literal_eval(b_src)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     mod = importlib.import_module(modname)
     orig = getattr(mod, attr)
