@@ -6,6 +6,10 @@ prints ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
 Protocol (BASELINE.md): 3 runs per query, median wall-clock, session
 startup excluded. Queries are materialized through the noop sink so
 every column is computed but nothing is collected to the driver.
+
+The timing harness is defined here once — :func:`canary`,
+:func:`time_query` and :class:`StreamTelemetry` — and ``tools/``
+imports it.
 """
 
 from __future__ import annotations
@@ -14,11 +18,15 @@ import json
 import os
 import statistics
 import sys
+import threading
 import time
+from collections import Counter
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from clj_kinesis_to_firehose_spark import bench_probe, registry  # noqa: E402
+from clj_kinesis_to_firehose_spark import registry  # noqa: E402
 from clj_kinesis_to_firehose_spark.session import build_spark  # noqa: E402
 
 #: headline set: one representative per operator family, weighted
@@ -125,6 +133,94 @@ N_RUNS_TPUT = 5
 #: before calling a delta a regression.
 CANARY_REF_SEC = 0.343
 
+#: bounded wait for the streaming listener's asynchronous delivery
+TELEMETRY_WAIT_SEC = 30.0
+
+
+def canary(spark) -> list[float]:
+    """Box-throughput canary (round-13): the load-average quiesce stamp
+    is blind to host-level slowdowns — r13 measured the SAME rev at
+    9.67 s and 13.35 s headline, both "quiesced", and an unchanged r12
+    rev read 11.66 s against its recorded 9.94 s. A fixed pure-JVM
+    compute (sum over 600M longs, 32 partitions, no I/O) calibrates
+    each run: compare cross-round query times via (time / canary)
+    before calling anything a regression. Returns the three run
+    times."""
+    runs = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        spark.range(0, 600_000_000, 1, 32).selectExpr(
+            "sum(id * (id % 7)) AS s"
+        ).collect()
+        runs.append(round(time.perf_counter() - t0, 3))
+    return runs
+
+
+def canary_ratio(runs: list[float]) -> float:
+    """This box's canary median over the r13 record box's."""
+    return round(statistics.median(runs) / CANARY_REF_SEC, 3)
+
+
+def time_query(spark, fn, sf_dir: str) -> float:
+    """Wall-clock seconds of one cold run of a registered query: result
+    memos cleared (fits are measured COLD every run — the memos exist
+    for the test suite, one fit per process, not for the stopwatch),
+    the DataFrame built, then materialized through the noop sink so
+    every column is computed but nothing is collected."""
+    registry.clear_memos()
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+class StreamTelemetry(StreamingQueryListener):
+    """Per-query sums of Spark's own micro-batch ``durationMs`` split
+    (addBatch, getBatch, latestOffset, queryPlanning, walCommit,
+    commitOffsets, triggerExecution). :meth:`mark` before a run,
+    :meth:`split_since` after it: the summed split of every streaming
+    query that started in between."""
+
+    def __init__(self) -> None:
+        self._cond = threading.Condition()
+        self._started: list[str] = []
+        self._ended: set[str] = set()
+        self._ms: dict[str, Counter] = {}
+
+    def onQueryStarted(self, event) -> None:
+        with self._cond:
+            self._started.append(str(event.id))
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        with self._cond:
+            self._ms.setdefault(str(p.id), Counter()).update(p.durationMs)
+
+    def onQueryTerminated(self, event) -> None:
+        with self._cond:
+            self._ended.add(str(event.id))
+            self._cond.notify_all()
+
+    def mark(self) -> int:
+        with self._cond:
+            return len(self._started)
+
+    def split_since(self, mark: int) -> dict[str, int]:
+        """Listener delivery is asynchronous: sum only after every
+        query seen to start has been seen to terminate (progress
+        events precede their query's terminated event on the bus).
+        Empty if that takes longer than :data:`TELEMETRY_WAIT_SEC` —
+        no split rather than a partial one."""
+        with self._cond:
+            if not self._cond.wait_for(
+                lambda: self._ended.issuperset(self._started),
+                TELEMETRY_WAIT_SEC,
+            ):
+                return {}
+            total: Counter = Counter()
+            for qid in self._started[mark:]:
+                total.update(self._ms.get(qid, {}))
+        return dict(total)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -151,20 +247,7 @@ def main() -> None:
             break
         time.sleep(10)
     spark = build_spark("kf-bench")
-    # Box-throughput canary (round-13): the load-average quiesce stamp
-    # is blind to host-level slowdowns — r13 measured the SAME rev at
-    # 9.67 s and 13.35 s headline, both "quiesced", and an unchanged
-    # r12 rev read 11.66 s against its recorded 9.94 s. A fixed
-    # pure-JVM compute (sum over 600M longs, 32 partitions, no I/O)
-    # calibrates each run: compare cross-round query times via
-    # (time / canary) before calling anything a regression.
-    canary_runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 600_000_000, 1, 32).selectExpr(
-            "sum(id * (id % 7)) AS s"
-        ).collect()
-        canary_runs.append(round(time.perf_counter() - t0, 3))
+    canary_runs = canary(spark)
     box_canary_sec = statistics.median(canary_runs)
     # Bench hygiene (round-6 verdict #4): WARN-level internal probes —
     # FileStreamSink's "assume no metadata directory" check fires a
@@ -172,6 +255,8 @@ def main() -> None:
     # sink's staged files back — pollute the tail and mask real
     # failures. The bench only needs ERROR+.
     spark.sparkContext.setLogLevel("ERROR")
+    telemetry = StreamTelemetry()
+    spark.streams.addListener(telemetry)
     queries = registry.queries()
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -180,13 +265,7 @@ def main() -> None:
         runs = []
         try:
             for _ in range(N_RUNS):
-                # fits are measured COLD every run: the result memos
-                # exist for the test suite (one fit per process), not
-                # for the stopwatch
-                registry.clear_memos()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
+                runs.append(time_query(spark, fn, sf_dir))
             timings[name] = round(statistics.median(runs), 3)
         except Exception:  # one broken query must not zero the round's bench
             import traceback
@@ -200,19 +279,15 @@ def main() -> None:
         try:
             runs = []
             for _ in range(N_RUNS_EXT):
-                registry.clear_memos()  # cold fit per timed run
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
+                mark = telemetry.mark()
+                runs.append(time_query(spark, queries[name], sf_dir))
             extended[name] = round(statistics.median(runs), 3)
-            # setup vs steady-state split (round-7 verdict #5): the
-            # streaming metric is startup-dominated at small SF; the
-            # phase probe makes a steady-state regression visible
-            # beside the unchanged total (split is from the LAST run)
-            for ph, sec in bench_probe.phases(name).items():
-                extended[f"{name}_{ph}"] = sec
+            # where a streaming row's time went (round-7 verdict #5:
+            # the total is startup-dominated at small SF): Spark's own
+            # per-micro-batch durationMs split, summed over the LAST
+            # run's queries, beside the unchanged total
+            for key, ms in telemetry.split_since(mark).items():
+                extended[f"{name}_{key}_ms"] = ms
         except Exception:
             import traceback
 
@@ -246,6 +321,7 @@ def main() -> None:
                 from clj_kinesis_to_firehose_spark.sources import streams
 
                 streams._REPLAY_CACHE.clear()
+                mark = telemetry.mark()
                 t0 = time.perf_counter()
                 rows = queries[qname](spark, sf_dir).collect()
                 dt = time.perf_counter() - t0
@@ -255,8 +331,8 @@ def main() -> None:
             extended[metric] = round(statistics.median(vals), 1)
             extended[f"{metric}_runs"] = vals
             extended[f"{metric}_spread"] = round(max(vals) / min(vals), 2)
-            for ph, sec in bench_probe.phases(qname).items():
-                extended[f"{qname}_{ph}"] = sec
+            for key, ms in telemetry.split_since(mark).items():
+                extended[f"{qname}_{key}_ms"] = ms
         except Exception:
             import traceback
 
@@ -276,10 +352,10 @@ def main() -> None:
         "stream_pyds_records_per_sec", "stream_pyds_connector_pair",
         "n_records",
     )
-    canary_ratio = round(box_canary_sec / CANARY_REF_SEC, 3)
+    ratio = canary_ratio(canary_runs)
 
     def _norm_sec(v: float) -> float:
-        return round(v / canary_ratio, 3)
+        return round(v / ratio, 3)
 
     # Tail-truncation hardening (r15 verdict #3/#6): the driver archives
     # only a ~2 kB tail of stdout, and r14's single giant JSON line
@@ -309,7 +385,7 @@ def main() -> None:
         # compare THESE across rounds; the raw values above stay the
         # record of what actually happened.
         "canary_ref_sec": CANARY_REF_SEC,
-        "canary_ratio": canary_ratio,
+        "canary_ratio": ratio,
         "value_normalized_sec": _norm_sec(total),
         "queries_normalized": {k: _norm_sec(v) for k, v in timings.items()},
     }
@@ -321,14 +397,14 @@ def main() -> None:
         "extended": extended,
         "extended_normalized": {
             k: (
-                round(v * canary_ratio, 1)
+                round(v * ratio, 1)
                 if "records_per_sec" in k
                 else _norm_sec(v)
             )
             for k, v in extended.items()
             if isinstance(v, (int, float))
         },
-        "canary_ratio": canary_ratio,
+        "canary_ratio": ratio,
     }
     if ext_errors:
         ext_out["extended_errors"] = ext_errors  # non-gating: no exit(1)

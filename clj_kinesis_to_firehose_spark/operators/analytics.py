@@ -27,17 +27,6 @@ FUNNEL_STAGES = ["signup", "view", "purchase"]
 #: sessionization gap (seconds) for funnel/session stats
 SESSION_GAP_S = 30 * 60
 
-#: basket_copurchase_pairs self-join strategy (guide §2.4/§3.1). True =
-#: merge hint: both sides then require the IDENTICAL
-#: hashpartitioning(orderkey) exchange over the same scan→distinct
-#: subtree, so exchange reuse computes the distinct once and reads the
-#: shuffle twice — and SMJ is the 100 TB shape (no broadcast bound on
-#: the distinct-(order,part) relation, AQE skew-split applies to hot
-#: basket keys). False = planner default (broadcast at fixture scale,
-#: which builds the distinct twice and ships the whole relation).
-#: Fixture A/B: plans/r16/ab_basket_hint.json.
-BASKET_SELF_JOIN_MERGE_HINT = True
-
 
 @register(
     "funnel_conversion",
@@ -769,8 +758,14 @@ def basket_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p1"))
     b = li.select(F.col("l_orderkey").alias("k2"), F.col("l_partkey").alias("p2"))
     return (
+        # merge hint: both sides require the IDENTICAL
+        # hashpartitioning(orderkey) exchange over the same distinct, so
+        # exchange reuse computes the distinct once; the planner's own
+        # choice (a broadcast at fixture scale) builds it twice and ships
+        # the whole relation. SMJ is also the 100 TB shape: no broadcast
+        # bound, and AQE skew-split applies to hot basket keys.
         a.join(
-            b.hint("merge") if BASKET_SELF_JOIN_MERGE_HINT else b,
+            b.hint("merge"),
             (F.col("k") == F.col("k2")) & (F.col("p1") < F.col("p2")),
         )
         .groupBy("p1", "p2")

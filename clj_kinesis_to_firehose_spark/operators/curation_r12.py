@@ -475,7 +475,6 @@ def bpe_learn_merges_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clj_kinesis_to_firehose_spark.operators.curation_r11 import (
         _bpe_pair_counts,
     )
-    from clj_kinesis_to_firehose_spark.plancap import capture_iter_plan
 
     w = _bpe_len2_dictionary(spark, sf_dir)
     merges: list[tuple[int, str, str, int]] = []
@@ -566,11 +565,7 @@ def bpe_learn_merges_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
             stmt, args = _delta_stmt()
             args["pat"] = f"|{l}|{r}|"
             args["sub"] = f"|{l}{r}|"
-            delta_df = spark.sql(stmt, args=args, w=w)
-            if k == 2:
-                # steady-state iteration body (k=1 has no pending chain)
-                capture_iter_plan(delta_df, "bpe_learn_merges_scaled_iter")
-            for d in delta_df.collect():
+            for d in spark.sql(stmt, args=args, w=w).collect():
                 key = (d["left_sym"], d["right_sym"])
                 nv = counts.get(key, 0) + int(d["pair_count"])
                 if nv:

@@ -139,10 +139,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.lit(1.0 - DAMPING) + F.lit(DAMPING) * F.col("inflow")).alias("rank"),
             )
         )
-        if it == 0:
-            from clj_kinesis_to_firehose_spark.plancap import capture_iter_plan
-
-            capture_iter_plan(ranks, "graph_pagerank_iter")
         ranks = ranks.localCheckpoint(eager=True)
     return (
         ranks.select("node", F.round("rank", 6).alias("rank"))

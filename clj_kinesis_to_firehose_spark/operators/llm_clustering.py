@@ -248,23 +248,10 @@ def _fit_kmeans_fp(
 
         inertia: list[int] = []
         for it in range(KMEANS_ITERS):
-            partials_df = fit_q.select("eq").mapInPandas(
+            partials = fit_q.select("eq").mapInPandas(
                 _iter_partials_fn(cent),
                 "cluster int, n long, s array<long>, ss array<long>",
-            )
-            if it == 0:
-                # loop-body plan evidence (r15 verdict #2): the fit's
-                # per-iteration jobs never appear in the registered
-                # DF's own explain
-                from clj_kinesis_to_firehose_spark.plancap import (
-                    capture_iter_plan,
-                )
-
-                capture_iter_plan(
-                    partials_df,
-                    f"kmeans_fit_iter{('_' + tag) if tag else ''}",
-                )
-            partials = partials_df.collect()  # bounded: k rows per task
+            ).collect()  # bounded: k rows per task
             # fold task partials in Python ints (exact, unbounded)
             tot_n = [0] * K_CLUSTERS
             tot_s = [[0] * DIM for _ in range(K_CLUSTERS)]

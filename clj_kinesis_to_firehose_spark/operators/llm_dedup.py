@@ -142,21 +142,6 @@ _SQL_VERIFY_TAIL = """
 #: not model the guard, is unaffected on non-adversarial corpora.
 BAND_BUCKET_CAP = 1024
 
-#: r16 A/B switch (r15 verdict #2): the merge hint on the band-bucket
-#: self-join (see band_candidates). True = SMJ with both sides sharing
-#: one hashpartitioning(band, bucket) exchange — the signature
-#: pipeline runs once (r15) and AQE skew-split applies at scale.
-#: False = the pre-r15 planner-chosen broadcast shape (pipeline built
-#: twice). VERDICT (committed matched-canary A/B,
-#: plans/r16/ab_minhash_hint.json — 5 interleaved runs per variant,
-#: one session): 1.556 s hinted vs 1.539 s unhinted on
-#: dedup_near_minhash — a wash at fixture scale (1.1%, inside noise),
-#: so the hint KEEPS shipping on its 100 TB merits: one shared
-#: exchange instead of a twice-built signature pipeline, no broadcast
-#: memory bound, AQE skew-split applicable. The r15 driver's
-#: cross-phase regression read was box phase, not the plan.
-BAND_SELF_JOIN_MERGE_HINT = True
-
 #: dedup_semantic_prune's within-cluster pair salt (guide §2.5): b
 #: takes pmod(xxhash64(vec_id), k), a replicates over all k salts, so
 #: a cluster's deg² pair expansion splits across k tasks — the
@@ -328,7 +313,7 @@ def band_candidates(
         # the 100 TB shape: AQE skew-split applies to it, and no
         # bucket relation need fit in broadcast memory.
         left.join(
-            right.hint("merge") if BAND_SELF_JOIN_MERGE_HINT else right,
+            right.hint("merge"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),

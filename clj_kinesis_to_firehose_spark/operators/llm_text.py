@@ -20,19 +20,6 @@ from clj_kinesis_to_firehose_spark.sources import fan_out, load_table
 #: the fixture vocabulary so the ratios are non-degenerate
 STOPWORDS = ["a", "the", "value", "table"]
 
-#: minimum estimated documents input size for text_tfidf_topterms' tf
-#: lazy pin (r16, r15 verdict #2): the pin trades the df branch's
-#: second corpus scan+tokenize for one materialize+cache of the tf
-#: table. The r15 driver's cross-phase read suggested the pin might
-#: lose at fixture scale; the committed matched-canary A/B
-#: (plans/r16/ab_tfidf_pin.json — 5 interleaved runs per variant, one
-#: session) settles it the other way: pin 0.902 s vs no-pin 1.238 s
-#: median even on the 0.57 MB fixture, so the pin ships UNGATED
-#: (threshold 0). The gate stays wired so a deployment where the
-#: materialization loses can flip one constant; unknown input sizes
-#: (-1, non-local storage) always keep the pin.
-TFIDF_PIN_MIN_BYTES = 0
-
 
 @register(
     "text_wordcount",
@@ -131,16 +118,15 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # own execution, the df aggregation and the join both read the
     # checkpointed blocks, and nothing survives the query (no
     # cross-run cache — each invocation builds a fresh RDD). The
-    # materialized relation is the term-level tf table (Zipf-bounded),
-    # never the corpus. Guide §2.4 (share one exchange) + §5.
-    # Gated on estimated input size (r16 — see TFIDF_PIN_MIN_BYTES):
-    # under the threshold the duplicated scan is cheaper than the
-    # materialization; unknown sizes keep the pin (the 100 TB shape).
-    from clj_kinesis_to_firehose_spark.sources.loader import input_bytes
-
-    nbytes = input_bytes(docs)
-    if nbytes < 0 or nbytes >= TFIDF_PIN_MIN_BYTES:
-        tf = tf.localCheckpoint(eager=False)
+    # pinned relation has one row per (doc, term), so it grows
+    # linearly with the corpus: at 100 TB it is a corpus-sized
+    # materialization (executor memory, spilling to local disk), no
+    # smaller in kind than the token stream it aggregates. It still
+    # pays because the alternative is a second full scan + tokenize
+    # of that corpus, which costs more than writing and re-reading the
+    # aggregated pairs once (fixture A/B, plans/r16/ab_tfidf_pin.json:
+    # 0.902 s pinned vs 1.238 s unpinned). Guide §2.4 + §5.
+    tf = tf.localCheckpoint(eager=False)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = (
         tf.join(df, "term")  # unhinted: AQE broadcasts iff small

@@ -995,15 +995,6 @@ def _bt_fit(
                 .alias("s"),
             )
         )
-        if it == 1:
-            # loop-body plan evidence (r15 verdict #2): one MM
-            # iteration's update plan, invisible in the registered
-            # DF's own explain once the strength relation is truncated
-            from clj_kinesis_to_firehose_spark.plancap import (
-                capture_iter_plan,
-            )
-
-            capture_iter_plan(s, "pref_bt_mm_iter")
         if checkpoint_every and it % checkpoint_every == 0 and it < iters:
             # lineage truncation: without this, the plan for iteration
             # N nests ~3^N copies of the per-step subtree (the MM step

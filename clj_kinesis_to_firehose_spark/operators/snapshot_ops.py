@@ -617,50 +617,48 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the churn, and the stream checkpoint carries the consumer's
     position across restarts."""
     import os
-    import tempfile
 
-    from clj_kinesis_to_firehose_spark import bench_probe
+    from clj_kinesis_to_firehose_spark.sources import scratch_dir
     from clj_kinesis_to_firehose_spark.sources.streams import _stamp_slice_order
 
-    with bench_probe.phase("snapshot_changes_stream", "setup_sec"):
-        src = SnapshotTable(
-            spark, fresh_table_dir(sf_dir, "cdf_stream_src", spark), key="o_orderkey"
-        )
-        base = _base_orders(spark, sf_dir)
-        src.create(base, n_files=8)
-        src.merge_upsert(_updates(base))  # v2
-        src.delete_where("o_totalprice < 50000.0")  # v3
+    src = SnapshotTable(
+        spark, fresh_table_dir(sf_dir, "cdf_stream_src", spark), key="o_orderkey"
+    )
+    base = _base_orders(spark, sf_dir)
+    src.create(base, n_files=8)
+    src.merge_upsert(_updates(base))  # v2
+    src.delete_where("o_totalprice < 50000.0")  # v3
 
-        feed_dir = fresh_table_dir(sf_dir, "cdf_stream_feed", spark)
-        for v in range(1, src.latest_version()):
-            (
-                src.changes(v, v + 1)
-                .select(
-                    "o_orderkey",
-                    "o_totalprice",
-                    (F.col("change_type") == "delete").alias("_del"),
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(feed_dir, f"slice={v - 1}"))
+    feed_dir = fresh_table_dir(sf_dir, "cdf_stream_feed", spark)
+    for v in range(1, src.latest_version()):
+        (
+            src.changes(v, v + 1)
+            .select(
+                "o_orderkey",
+                "o_totalprice",
+                (F.col("change_type") == "delete").alias("_del"),
             )
-        _stamp_slice_order(feed_dir)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(feed_dir, f"slice={v - 1}"))
+        )
+    _stamp_slice_order(feed_dir)
 
-        replica = SnapshotTable(
-            spark,
-            fresh_table_dir(sf_dir, "cdf_stream_replica", spark),
-            key="o_orderkey",
+    replica = SnapshotTable(
+        spark,
+        fresh_table_dir(sf_dir, "cdf_stream_replica", spark),
+        key="o_orderkey",
+    )
+    replica.create(src.read(version=1), n_files=8)
+    chk = scratch_dir("kf_chk_")
+    stream = (
+        spark.readStream.schema(
+            "o_orderkey long, o_totalprice double, _del boolean"
         )
-        replica.create(src.read(version=1), n_files=8)
-        chk = tempfile.mkdtemp(prefix="kf_chk_")
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey long, o_totalprice double, _del boolean"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(feed_dir)
-        )
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(feed_dir)
+    )
 
     def apply(bdf: DataFrame, _bid: int) -> None:
         if bdf.isEmpty():
@@ -668,14 +666,13 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         replica.merge_upsert(bdf, tombstone_col="_del")
         replica.merge_upsert(bdf, tombstone_col="_del")  # retry double
 
-    with bench_probe.phase("snapshot_changes_stream", "stream_sec"):
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return replica.read()
 
 

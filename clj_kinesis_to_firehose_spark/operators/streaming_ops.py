@@ -678,7 +678,6 @@ def stream_pyds_connector_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     original events table: whatever goes through both connector faces
     must come out bit-equal in count, identity, and value mass."""
     import glob
-    import tempfile
 
     from clj_kinesis_to_firehose_spark.sources.pyds import (
         register_delivery_sink,
@@ -688,25 +687,21 @@ def stream_pyds_connector_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_replay_slices,
     )
 
-    from clj_kinesis_to_firehose_spark import bench_probe
-
-    with bench_probe.phase("stream_pyds_connector_pair", "setup_sec"):
-        register_replay_source(spark)
-        register_delivery_sink(spark)
-        replay = write_replay_slices(spark, sf_dir, n_slices=4)
-        out = tempfile.mkdtemp(prefix="kf_pyds_deliv_")
-    with bench_probe.phase("stream_pyds_connector_pair", "stream_sec"):
-        q = (
-            spark.readStream.format("kinesis_replay")
-            .option("path", replay)
-            .load()
-            .writeStream.format("firehose_delivery")
-            .option("path", out)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="kf_chk_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    register_replay_source(spark)
+    register_delivery_sink(spark)
+    replay = write_replay_slices(spark, sf_dir, n_slices=4)
+    out = scratch_dir("kf_pyds_deliv_")
+    q = (
+        spark.readStream.format("kinesis_replay")
+        .option("path", replay)
+        .load()
+        .writeStream.format("firehose_delivery")
+        .option("path", out)
+        .option("checkpointLocation", scratch_dir("kf_chk_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     delivered = spark.read.schema(
         "event_id long, ts string, user_id long, "
         "event_type string, value double, props string"

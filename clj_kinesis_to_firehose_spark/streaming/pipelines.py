@@ -17,7 +17,6 @@ incrementally (RocksDB provider configured in session.py).
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pandas as pd
@@ -26,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from clj_kinesis_to_firehose_spark.sources import scratch_dir
 from clj_kinesis_to_firehose_spark.sources.streams import (
     read_event_stream,
     write_replay_slices,
@@ -38,7 +38,7 @@ from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run a bounded stream into a memory sink, return the result table."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    chk = scratch_dir("kf_chk_")
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -158,7 +158,7 @@ def stream_stateful_counter(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    chk = scratch_dir("kf_chk_")
     q = (
         counted.writeStream.format("memory")
         .queryName(name)
@@ -251,7 +251,7 @@ def _drain_update_stream(counted: DataFrame) -> DataFrame:
     the emitted updates to the final (monotone-max) row per user."""
     spark = counted.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    chk = scratch_dir("kf_chk_")
     q = (
         counted.writeStream.format("memory")
         .queryName(name)
@@ -538,8 +538,8 @@ def stream_firehose_pipeline(
     directory — the at-least-once/effectively-once audit surface.
     """
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
-    delivery_dir = out_dir or tempfile.mkdtemp(prefix="kf_firehose_")
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    delivery_dir = out_dir or scratch_dir("kf_firehose_")
+    chk = scratch_dir("kf_chk_")
     ev = read_event_stream(spark, replay)
     routed = ev.withColumn(
         "prop_k", F.get_json_object("props", "$.k").cast("long")
@@ -579,8 +579,8 @@ def stream_firehose_dynamic_partition(
     partition's records group by prefix locally before delivery, so
     batch caps apply per prefix exactly as per stream."""
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
-    delivery_dir = out_dir or tempfile.mkdtemp(prefix="kf_fh_dyn_")
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    delivery_dir = out_dir or scratch_dir("kf_fh_dyn_")
+    chk = scratch_dir("kf_chk_")
     ev = read_event_stream(spark, replay)
     routed = ev.filter(F.col("event_type") != "error").withColumn(
         "__prefix",
@@ -637,8 +637,8 @@ def stream_firehose_format_conversion(
     )
 
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
-    delivery_dir = out_dir or tempfile.mkdtemp(prefix="kf_fh_pq_")
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    delivery_dir = out_dir or scratch_dir("kf_fh_pq_")
+    chk = scratch_dir("kf_chk_")
     ev = read_event_stream(spark, replay)
     routed = ev.filter(F.col("event_type") != "error")
     q = (
@@ -750,8 +750,8 @@ def stream_reshard_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     replay = write_reshard_replay(spark, sf_dir)
-    cap_dir = os.path.join(tempfile.mkdtemp(prefix="kf_reshard_cap_"), "arrivals")
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    cap_dir = os.path.join(scratch_dir("kf_reshard_cap_"), "arrivals")
+    chk = scratch_dir("kf_chk_")
 
     def capture(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn("batch_id", F.lit(int(epoch_id))).write.mode(
@@ -838,7 +838,7 @@ def stream_kpl_firehose_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = sliced.groupBy("__slice", "__batch").applyInPandas(
         encode, "slice int, blob binary"
     ).persist()
-    replay_dir = tempfile.mkdtemp(prefix="kf_kpl_replay_")
+    replay_dir = scratch_dir("kf_kpl_replay_")
     try:
         for i in range(4):
             (
@@ -879,8 +879,8 @@ def stream_kpl_firehose_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.*")
     )
     routed = parsed.filter(F.col("event_type") != "error")
-    delivery_dir = tempfile.mkdtemp(prefix="kf_kpl_fh_")
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
+    delivery_dir = scratch_dir("kf_kpl_fh_")
+    chk = scratch_dir("kf_chk_")
     q = (
         routed.writeStream.foreachBatch(firehose_foreach_batch(delivery_dir))
         .option("checkpointLocation", chk)

@@ -6,6 +6,8 @@ whole-stage codegen."""
 
 from __future__ import annotations
 
+import re
+
 from clj_kinesis_to_firehose_spark import registry
 from clj_kinesis_to_firehose_spark.plans import audit
 from tests.conftest import SF_DIR
@@ -199,11 +201,8 @@ def test_basket_pairs_single_fact_shuffle(spark):
     # identical distinct exchange (AQE reuses it at runtime) instead of
     # building the distinct twice around a broadcast of the whole
     # relation; the hint is in the static plan, so assert it here
-    from clj_kinesis_to_firehose_spark.operators import analytics
-
-    if analytics.BASKET_SELF_JOIN_MERGE_HINT:
-        assert "SortMergeJoin" in plan, plan
-        assert "BroadcastHashJoin" not in plan, plan
+    assert "SortMergeJoin" in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 def test_q6_all_predicates_reach_fact_scan(spark):
@@ -644,6 +643,12 @@ def test_guarded_minhash_stays_linear_no_cartesian(spark):
     plan = audit.formatted_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert audit.n_shuffles(df) <= 7, plan
+    # the band self-join is hint-forced SMJ: both sides share one
+    # hashpartitioning(band, bucket) exchange, so the signature
+    # pipeline runs once (a broadcast side would build it twice)
+    assert re.search(
+        r"SortMergeJoin\nLeft keys \[2\]: \[band#\d+, bucket#\d+\]", plan
+    ), plan
 
 
 def test_prefix_share_sorts_per_bucket_not_globally(spark):

@@ -76,18 +76,20 @@ def test_probe_joins_carry_the_bucket_gate(spark, name):
 
 def test_green_tail_orders_stalest_record_first():
     """r13 verdict #5: with every query driver-green, the window must
-    become a freshness rotation — the live first-50 window contains
-    >= 20 ops whose latest record predates round 5 (the r2/r3
-    agg/window/scalar core re-proves under the current driver)."""
+    become a freshness rotation — names without a conclusive record
+    come first, and every green name in the live first-50 window has a
+    latest record no newer than any green name outside it (the stalest
+    cohort re-proves under the current driver)."""
     latest = registry._latest_records()
     seen = registry._adjudicated_names()
-    window = list(registry.queries())[:50]
-    # a window slot is well-spent iff it needs adjudication (no
-    # conclusive record — including revalidations and new ops) or its
-    # green record is from the stalest cohort
-    needs = [n for n in window if n not in seen]
-    stale = [n for n in window if n in seen and latest[n][0] < 5]
-    assert len(stale) + len(needs) >= 20, window
+    order = list(registry.queries())
+    is_green = [n in seen for n in order]
+    assert is_green == sorted(is_green), order
+    window, rest = order[:50], order[50:]
+    in_window = [latest[n][0] for n in window if n in seen]
+    outside = [latest[n][0] for n in rest if n in seen]
+    if in_window and outside:
+        assert max(in_window) <= min(outside), window
 
 
 def test_tail_sort_is_stable_by_registration_within_round(tmp_path):

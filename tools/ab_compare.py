@@ -1,16 +1,18 @@
 #!/usr/bin/env python
-"""Matched-canary A/B for a registered query whose code carries a
-module-level variant switch (r15 verdict #1 / r16 work item #2): runs
-variant A and variant B INTERLEAVED in one session — one discarded
-warm-up per variant, then N kept runs each, alternating A,B,A,B so box
-phase hits both equally — and writes the whole record as JSON.
+"""Matched-canary A/B of a registered query under two values of a
+module-level attribute it reads (a width, a cap, a threshold, an
+iteration count): runs variant A and variant B INTERLEAVED in one
+session — one discarded warm-up per variant, then N kept runs each,
+alternating A,B,A,B so box phase hits both equally — and writes the
+whole record as JSON.
 
 Usage:
   python tools/ab_compare.py out.json QUERY MODULE ATTR A_VALUE B_VALUE [N]
 
-A_VALUE/B_VALUE are eval()'d (e.g. "0", "1 << 60", "True", "False").
-The module attribute is restored afterward. The timed action is the
-bench's own methodology: cold memos, noop sink, wall-clock.
+A_VALUE/B_VALUE are Python literals, parsed with ``ast.literal_eval``
+(e.g. "0", "1024", "True", "False"). The module attribute is restored
+afterward. The timed action is ``bench.time_query``: cold memos, noop
+sink, wall-clock.
 """
 
 from __future__ import annotations
@@ -21,25 +23,12 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from clj_kinesis_to_firehose_spark import registry  # noqa: E402
 from clj_kinesis_to_firehose_spark.session import build_spark  # noqa: E402
-
-CANARY_REF_SEC = 0.343  # bench.py's r13 record-box anchor
-
-
-def _canary(spark) -> list[float]:
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 600_000_000, 1, 32).selectExpr(
-            "sum(id * (id % 7)) AS s"
-        ).collect()
-        runs.append(round(time.perf_counter() - t0, 3))
-    return runs
 
 
 def main() -> int:
@@ -55,13 +44,10 @@ def main() -> int:
 
     def one_run(val) -> float:
         setattr(mod, attr, val)
-        registry.clear_memos()
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+        return round(bench.time_query(spark, fn, sf_dir), 3)
 
     try:
-        canary_pre = _canary(spark)
+        canary_pre = bench.canary(spark)
         spark.sparkContext.setJobDescription(f"ab:{qname}")
         warm = {"A": one_run(a_val), "B": one_run(b_val)}
         runs_a: list[float] = []
@@ -69,7 +55,7 @@ def main() -> int:
         for _ in range(n):
             runs_a.append(one_run(a_val))
             runs_b.append(one_run(b_val))
-        canary_post = _canary(spark)
+        canary_post = bench.canary(spark)
     finally:
         setattr(mod, attr, orig)
         spark.stop()
@@ -93,12 +79,8 @@ def main() -> int:
         "ratio_B_over_A": round(med_b / med_a, 3) if med_a else None,
         "canary_pre_runs": canary_pre,
         "canary_post_runs": canary_post,
-        "canary_ratio_pre": round(
-            statistics.median(canary_pre) / CANARY_REF_SEC, 3
-        ),
-        "canary_ratio_post": round(
-            statistics.median(canary_post) / CANARY_REF_SEC, 3
-        ),
+        "canary_ratio_pre": bench.canary_ratio(canary_pre),
+        "canary_ratio_post": bench.canary_ratio(canary_post),
     }
     with open(out_path, "w") as fh:
         json.dump(rec, fh, indent=1)
