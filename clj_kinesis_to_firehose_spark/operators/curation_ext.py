@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from clj_kinesis_to_firehose_spark.registry import register
-from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.sources import load_table, scratch_dir
 
 
 def with_norm_url(df: DataFrame) -> DataFrame:
@@ -387,7 +387,6 @@ def dedup_incremental_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     is absent from the index AND it is the first delta holder of
     that key (min doc_id — the deterministic winner rule)."""
     import os
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", (F.col("doc_id") % 400).alias("rid")
@@ -405,9 +404,7 @@ def dedup_incremental_url(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).select("doc_id", "b", F.md5("norm_url").alias("url_key"))
 
-    idx_dir = os.path.join(
-        tempfile.mkdtemp(prefix="kf_urlidx_"), "url_index"
-    )
+    idx_dir = os.path.join(scratch_dir("kf_urlidx_"), "url_index")
     keyed.filter(F.col("b") < 80).select("url_key").distinct().write.mode(
         "overwrite"
     ).parquet(idx_dir)

@@ -35,6 +35,7 @@ from clj_kinesis_to_firehose_spark.sources import (
     load_table,
     scratch_dir,
 )
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 # --- dedup_substring_spans -------------------------------------------------
 
@@ -1703,17 +1704,13 @@ def stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rewrites the same path with the same rows — idempotent
         out.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(admit_batch)
-        .option("checkpointLocation", scratch_dir("kf_admission_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.read.option("recursiveFileLookup", "true").parquet(
         out_dir
     ).select(
@@ -1997,17 +1994,13 @@ def stream_span_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deletes
         new_h.write.mode("overwrite").parquet(f"{index_dir}/epoch_{epoch}")
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", scratch_dir("kf_span_idx_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.read.option("recursiveFileLookup", "true").parquet(
         out_dir
     ).select(

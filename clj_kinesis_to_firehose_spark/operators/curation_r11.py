@@ -34,6 +34,7 @@ from clj_kinesis_to_firehose_spark.operators.llm_similarity import (
 )
 from clj_kinesis_to_firehose_spark.registry import register
 from clj_kinesis_to_firehose_spark.sources import fan_out, load_table
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 # --- vocabulary family -------------------------------------------------------
 
@@ -938,17 +939,13 @@ def stream_vocab_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stats.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(count_batch)
-        .option("checkpointLocation", scratch_dir("kf_vocab_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     merged = (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(out_dir)
@@ -1687,17 +1684,13 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         row.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(monitor_batch)
-        .option("checkpointLocation", scratch_dir("kf_oovmon_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.read.option("recursiveFileLookup", "true").parquet(
         out_dir
     ).select("batch_id", "n_docs", "n_tokens", "n_oov", "oov_rate")

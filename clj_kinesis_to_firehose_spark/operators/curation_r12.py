@@ -32,9 +32,6 @@ from __future__ import annotations
 
 import json
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,7 +49,8 @@ from clj_kinesis_to_firehose_spark.operators.llm_dedup import (
     sql_bucket_gate,
 )
 from clj_kinesis_to_firehose_spark.registry import oracle, register, register_memo
-from clj_kinesis_to_firehose_spark.sources import fan_out, load_table
+from clj_kinesis_to_firehose_spark.sources import fan_out, load_table, scratch_dir
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 # --- multimodal_phash_hamming_pairs ------------------------------------------
 
@@ -888,17 +886,7 @@ def stream_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("wstart"), "event_type", "n_events")
     )
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_bounded(out.writeStream.format("noop").outputMode("append"))
     rows = []
     for prog in q.recentProgress:
         p = json.loads(prog.json) if hasattr(prog, "json") else prog
@@ -1193,7 +1181,6 @@ def scan_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer).
     """
     import os
-    import tempfile
 
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -1208,9 +1195,7 @@ def scan_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority"),
         ).alias("value")
     )
-    out_dir = os.path.join(
-        tempfile.mkdtemp(prefix="kf_csv_corrupt_"), "orders_csv"
-    )
+    out_dir = os.path.join(scratch_dir("kf_csv_corrupt_"), "orders_csv")
     lines.write.mode("overwrite").text(out_dir)
     parsed = (
         spark.read.schema(
@@ -1809,17 +1794,7 @@ def stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = tempfile.mkdtemp(prefix="kf_chk_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_bounded(out.writeStream.format("noop").outputMode("append"))
     rows = []
     for prog in q.recentProgress:
         p = json.loads(prog.json) if hasattr(prog, "json") else prog
@@ -1905,10 +1880,7 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clj_kinesis_to_firehose_spark.operators.multimodal import (
         encode_media_batches,
     )
-    from clj_kinesis_to_firehose_spark.sources import (
-        prior_epoch_paths,
-        scratch_dir,
-    )
+    from clj_kinesis_to_firehose_spark.sources import prior_epoch_paths
 
     replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
     index_dir = scratch_dir("kf_phash_idx_")
@@ -1985,17 +1957,13 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         DOCS_RAW_SCHEMA,
     )
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", scratch_dir("kf_phash_idx_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.read.option("recursiveFileLookup", "true").parquet(
         out_dir
     ).select("doc_id", "batch_id", "n_dup_vs_prior", "novel")

@@ -47,6 +47,7 @@ from clj_kinesis_to_firehose_spark.operators.posttrain import (
 )
 from clj_kinesis_to_firehose_spark.registry import oracle, register
 from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 # --- pref_rejection_sampling ---------------------------------------------------
 
@@ -486,17 +487,13 @@ def stream_rejection_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(bestof_batch)
-        .option("checkpointLocation", scratch_dir("kf_bestof_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     partials = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
     # additive counts: one batch_n per (cohort, epoch) — max() collapses

@@ -55,6 +55,7 @@ from clj_kinesis_to_firehose_spark.sources import (
     load_table,
     scratch_dir,
 )
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 # --- sql_recursive_hierarchy --------------------------------------------------
 
@@ -301,14 +302,9 @@ def stream_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write("committed")
 
     def run_once() -> None:
-        q = (
-            read_event_stream(spark, replay)
-            .writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", scratch_dir("kf_idem_chk_"))
-            .trigger(availableNow=True)
-            .start()
+        run_bounded(
+            read_event_stream(spark, replay).writeStream.foreachBatch(commit_batch)
         )
-        q.awaitTermination()
 
     run_once()
     run_once()  # full redelivery: fresh checkpoint, same sink — no-op

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.registry import register
-from clj_kinesis_to_firehose_spark.sources import fan_out, load_table
+from clj_kinesis_to_firehose_spark.sources import fan_out, load_table, scratch_dir
 
 # MinHash parameters: 16 permutations in 4 bands of 4 rows. With
 # banding, P(candidate) = 1 - (1 - j^4)^4 — ~0.9 at jaccard 0.7,
@@ -908,7 +908,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ungated and Θ(bucket²)-exposed).
     """
     import os
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     bucket = (
@@ -919,7 +918,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_docs = docs.filter(bucket < 80)
     delta_docs = docs.filter(bucket >= 80)
 
-    index_dir = os.path.join(tempfile.mkdtemp(prefix="kf_mh_index_"), "sigs")
+    index_dir = os.path.join(scratch_dir("kf_mh_index_"), "sigs")
     _minhash_sigs(spark, base_docs).write.mode("overwrite").parquet(index_dir)
     base_sigs = spark.read.parquet(index_dir)  # the persisted index
     delta_sigs = _minhash_sigs(spark, delta_docs)

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.registry import oracle, register, register_memo
 from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 # --- pref_pair_assembly -------------------------------------------------------
 
@@ -1273,14 +1274,9 @@ def stream_chat_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    q = (
-        read_event_stream(spark, replay)
-        .writeStream.foreachBatch(assemble_batch)
-        .option("checkpointLocation", scratch_dir("kf_chat_chk_"))
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        read_event_stream(spark, replay).writeStream.foreachBatch(assemble_batch)
     )
-    q.awaitTermination()
     merged = (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(out_dir)
@@ -1732,17 +1728,13 @@ def stream_pref_pair_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial = _cohort_extremes(_score_docs(batch_df))
         partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(extremes_batch)
-        .option("checkpointLocation", scratch_dir("kf_pref_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     partials = spark.read.option("recursiveFileLookup", "true").parquet(
         out_dir
@@ -1847,14 +1839,9 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    q = (
-        read_event_stream(spark, replay)
-        .writeStream.foreachBatch(freshness_batch)
-        .option("checkpointLocation", scratch_dir("kf_fresh_chk_"))
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        read_event_stream(spark, replay).writeStream.foreachBatch(freshness_batch)
     )
-    q.awaitTermination()
     per_type = (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(out_dir)

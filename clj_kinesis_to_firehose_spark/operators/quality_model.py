@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from clj_kinesis_to_firehose_spark.operators.llm_text import STOPWORDS
 from clj_kinesis_to_firehose_spark.registry import register, register_memo
 from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 #: online-perceptron epochs over the sample (one update pass per
 #: epoch, doc_id order). 16 is past the knee on the fixture: train
@@ -354,17 +355,13 @@ def stream_quality_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         DOCS_RAW_SCHEMA,
     )
 
-    q = (
+    run_bounded(
         spark.readStream.schema(DOCS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(replay_dir)
         .writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", scratch_dir("kf_qladm_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(out_dir)

@@ -7,14 +7,13 @@ live in ``streaming/`` and are registered via ``streaming_ops``.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.registry import register
-from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.sources import load_table, scratch_dir
 
 
 @register("scan_parquet", oracle="SELECT * FROM region")
@@ -59,7 +58,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="kf_roundtrip_"), "events_out")
+    out = os.path.join(scratch_dir("kf_roundtrip_"), "events_out")
     events.select(
         "event_id", "ts", "user_id", "event_type", "event_date", "value"
     ).write.mode("overwrite").partitionBy("event_type", "event_date").parquet(out)
@@ -95,7 +94,7 @@ def scan_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Explicit schemas keep reads single-pass at scale (no inference
     scan); JSON-lines is exactly the Firehose→S3 delivery layout."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    base = tempfile.mkdtemp(prefix="kf_formats_")
+    base = scratch_dir("kf_formats_")
     csv_dir, json_dir = os.path.join(base, "csv"), os.path.join(base, "jsonl")
     ev.write.mode("overwrite").option("header", True).csv(csv_dir)
     ev.write.mode("overwrite").json(json_dir)
@@ -208,7 +207,7 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="kf_compact_")
+    base = scratch_dir("kf_compact_")
     frag_dir = os.path.join(base, "fragmented")
     compact_dir = os.path.join(base, "compacted")
     events.repartition(64).write.mode("overwrite").parquet(frag_dir)
@@ -233,7 +232,7 @@ def compact_file_counts(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="kf_compact_")
+    base = scratch_dir("kf_compact_")
     frag_dir = os.path.join(base, "fragmented")
     compact_dir = os.path.join(base, "compacted")
     events.repartition(64).write.mode("overwrite").parquet(frag_dir)
@@ -276,7 +275,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="kf_schema_evo_")
+    base = scratch_dir("kf_schema_evo_")
     gen1 = events.filter(F.col("event_id") % 2 == 0)
     gen2 = events.filter(F.col("event_id") % 2 == 1).withColumn(
         "quality_tier",
@@ -319,7 +318,7 @@ def scan_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     events = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="kf_dpp_"), "events_by_date")
+    out = os.path.join(scratch_dir("kf_dpp_"), "events_by_date")
     events.select("event_id", "event_type", "value", "event_date").write.mode(
         "overwrite"
     ).partitionBy("event_date").parquet(out)
@@ -527,7 +526,7 @@ def _sort_cluster_rewrite(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_quantity", "l_extendedprice"
     )
-    base = tempfile.mkdtemp(prefix="kf_sortcluster_")
+    base = scratch_dir("kf_sortcluster_")
     rand_dir = os.path.join(base, "random")
     sort_dir = os.path.join(base, "sorted")
     # small row groups so the fixture produces enough zone maps to count
@@ -630,7 +629,7 @@ def _zorder_rewrite(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
             ),
         ).alias("zval"),
     )
-    base = tempfile.mkdtemp(prefix="kf_zorder_")
+    base = scratch_dir("kf_zorder_")
     rand_dir = os.path.join(base, "random")
     user_dir = os.path.join(base, "user_sorted")
     z_dir = os.path.join(base, "zordered")

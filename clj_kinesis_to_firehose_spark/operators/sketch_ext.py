@@ -42,6 +42,7 @@ from pyspark.sql.window import Window
 from clj_kinesis_to_firehose_spark.operators.llm_dedup import portable_hash60
 from clj_kinesis_to_firehose_spark.registry import register
 from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 #: sketch size (values kept per set) and hash range (60-bit md5 prefix)
 KMV_K = 64
@@ -342,8 +343,6 @@ def stream_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metadata-sized, the repo's collect discipline); this is the
     live-dashboard "distinct users so far" pattern where recomputing
     the distinct from raw history every batch would be Θ(history)."""
-    import tempfile
-
     from clj_kinesis_to_firehose_spark.sources.pyds import (
         register_replay_source,
     )
@@ -376,16 +375,12 @@ def stream_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = sorted(set(state.get(r.event_type, [])) | set(r.sk))
             state[r.event_type] = merged[:K]
 
-    q = (
+    run_bounded(
         spark.readStream.format("kinesis_replay")
         .option("path", replay)
         .load()
         .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="kf_kmv_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     res = spark.createDataFrame(
         [(t, len(v), v[-1]) for t, v in state.items()],
@@ -428,8 +423,6 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB stream keeps a fixed-size uniform sample reproducibly —
     any two runs, any repartitioning, any batch cadence give the
     SAME rows, which classic random-reservoir sampling cannot."""
-    import tempfile
-
     from clj_kinesis_to_firehose_spark.sources.pyds import (
         register_replay_source,
     )
@@ -459,16 +452,12 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.sort(key=lambda t: (t[3], t[0]))
         state = merged[:N]
 
-    q = (
+    run_bounded(
         spark.readStream.format("kinesis_replay")
         .option("path", replay)
         .load()
         .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="kf_res_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     return spark.createDataFrame(
         state, "event_id long, event_type string, value double, hv long"

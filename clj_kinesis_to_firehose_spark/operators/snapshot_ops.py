@@ -28,6 +28,7 @@ from clj_kinesis_to_firehose_spark.registry import register
 from clj_kinesis_to_firehose_spark.sources import load_table
 from clj_kinesis_to_firehose_spark.storage import SnapshotTable
 from clj_kinesis_to_firehose_spark.storage.snapshots import fresh_table_dir
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 
 def _base_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,13 +256,11 @@ def snapshot_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(batch_dir, "slice=*"))
     )
-    q = stream.writeStream.foreachBatch(
-        lambda bdf, _bid: None if bdf.isEmpty() else t.merge_upsert(bdf)
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_bounded(
+        stream.writeStream.foreachBatch(
+            lambda bdf, _bid: None if bdf.isEmpty() else t.merge_upsert(bdf)
+        )
+    )
     return t.read()
 
 
@@ -618,7 +617,6 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     position across restarts."""
     import os
 
-    from clj_kinesis_to_firehose_spark.sources import scratch_dir
     from clj_kinesis_to_firehose_spark.sources.streams import _stamp_slice_order
 
     src = SnapshotTable(
@@ -650,7 +648,6 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         key="o_orderkey",
     )
     replica.create(src.read(version=1), n_files=8)
-    chk = scratch_dir("kf_chk_")
     stream = (
         spark.readStream.schema(
             "o_orderkey long, o_totalprice double, _del boolean"
@@ -666,13 +663,7 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         replica.merge_upsert(bdf, tombstone_col="_del")
         replica.merge_upsert(bdf, tombstone_col="_del")  # retry double
 
-    q = (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_bounded(stream.writeStream.foreachBatch(apply))
     return replica.read()
 
 

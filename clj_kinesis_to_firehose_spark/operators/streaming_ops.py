@@ -20,11 +20,9 @@ from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
     DeadLetterDir,
     LocalDirFirehoseClient,
     deliver_frame,
-    deliver_records,
     delivery_kernel,
     gzip_payload,
     newline_terminate,
-    serialize,
 )
 
 
@@ -433,46 +431,29 @@ def sink_firehose_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciled against the source."""
     out_dir = scratch_dir("kf_sink_xform_")
     ev = load_table(spark, sf_dir, "events")
-    serialized = serialize(
-        ev,
-        "event_type",
-        __value=F.col("value"),
-        __transformed=F.to_json(
-            F.struct(
-                "event_id", "user_id", "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-            )
-        ),
+    failed = F.col("event_type") == "error"
+    transformed = F.to_json(
+        F.struct(
+            "event_id", "user_id", "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+        )
     )
-
-    def per_partition(rows):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        client = LocalDirFirehoseClient(out_dir)
-        dead_letter = DeadLetterDir(out_dir)
-        ok: dict[str, list[bytes]] = {}
-        failed: dict[str, list[bytes]] = {}
-        for row in rows:
-            if row["__stream"] == "error":  # ProcessingFailed: original payload
-                failed.setdefault(row["__stream"], []).append(
-                    bytes(row["__payload"]) + b"\n"
-                )
-            elif row["__value"] < 1.0:  # Dropped
-                continue
-            else:  # Ok — transformed payload delivers
-                ok.setdefault(row["__stream"], []).append(
-                    row["__transformed"].encode("utf-8")
-                )
-        for stream, records in ok.items():
-            deliver_records(
-                records, client, stream, sleep=lambda s: None,
-                idempotency_prefix=f"xf-p{pid}-{stream}",
-            )
-        for stream, records in failed.items():
-            dead_letter(stream, records, idempotency_key=f"xf-p{pid}-fail")
-
-    serialized.foreachPartition(per_partition)
+    # ProcessingFailed payloads carry the poison marker, so with no
+    # retries they land in errors/ on their first attempt
+    kernel = delivery_kernel(
+        functools.partial(
+            LocalDirFirehoseClient, out_dir, poison_marker=b'"event_type":"error"'
+        ),
+        "xf",
+        dead_letter=DeadLetterDir(out_dir),
+        max_retries=0,
+    )
+    deliver_frame(
+        ev.filter(failed | (F.col("value") >= 1.0)),  # Dropped rows vanish
+        "event_type",
+        kernel,
+        payload=F.when(failed, F.to_json(F.struct(*ev.columns))).otherwise(transformed),
+    )
     delivered = (
         spark.read.json(os.path.join(out_dir, "*.jsonl"))
         .groupBy(F.col("event_type").alias("stream"))
@@ -691,17 +672,13 @@ def stream_pyds_connector_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_delivery_sink(spark)
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
     out = scratch_dir("kf_pyds_deliv_")
-    q = (
+    pipelines.run_bounded(
         spark.readStream.format("kinesis_replay")
         .option("path", replay)
         .load()
         .writeStream.format("firehose_delivery")
         .option("path", out)
-        .option("checkpointLocation", scratch_dir("kf_chk_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     delivered = spark.read.schema(
         "event_id long, ts string, user_id long, "
         "event_type string, value double, props string"

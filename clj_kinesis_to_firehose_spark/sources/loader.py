@@ -169,39 +169,16 @@ def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def input_bytes(df) -> int:
-    """Total size in bytes of the files feeding ``df``'s scan (plan
-    metadata + local stat), or -1 when unknown (non-local storage, no
-    file scan). Callers gate fixture-scale-only shortcuts on this and
-    MUST treat -1 as 'large' so the 100 TB plan shape is the default
-    whenever the estimate is unavailable."""
-    import os
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return -1
-    if not files:
-        return -1
-    total = 0
-    for f in files:
-        local = f[len("file:"):] if f.startswith("file:") else f
-        try:
-            total += os.path.getsize(local)
-        except OSError:
-            return -1
-    return total
-
-
 def estimated_bytes(df) -> int:
     """Spark's own size estimate of ``df`` (its optimized plan's
-    ``sizeInBytes``), or -1 when unknown. Same contract as
-    :func:`input_bytes`: callers MUST treat -1 as 'large'. Sources that
-    report no statistics (the rate source, Python DataSources) estimate
-    ``Long.MaxValue``, which reads as -1 here. Unlike ``input_bytes``
-    this needs no file listing, so it also sizes a ``foreachBatch``
-    micro-batch, whose ``inputFiles()`` is empty: the micro-batch plan
-    carries the statistics of the plan it was cut from."""
+    ``sizeInBytes``), or -1 when unknown; callers MUST treat -1 as
+    'large', so the 100 TB plan shape is the default whenever the
+    estimate is unavailable. Sources that report no statistics (the
+    rate source, Python DataSources) estimate ``Long.MaxValue``, which
+    reads as -1 here. It needs no file listing, so it also sizes a
+    ``foreachBatch`` micro-batch, whose ``inputFiles()`` is empty: the
+    micro-batch plan carries the statistics of the plan it was cut
+    from."""
     from py4j.protocol import Py4JError
 
     try:

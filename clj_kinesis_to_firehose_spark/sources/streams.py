@@ -10,7 +10,6 @@ is connector-agnostic DataFrame code.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,10 +94,10 @@ def write_replay_slices(
         return cached
     from pyspark.sql.window import Window
 
-    from clj_kinesis_to_firehose_spark.sources.loader import load_table
+    from clj_kinesis_to_firehose_spark.sources.loader import load_table, scratch_dir
 
     ensure_configs(spark)
-    replay_dir = tempfile.mkdtemp(prefix="kf_replay_")
+    replay_dir = scratch_dir("kf_replay_")
     raw = load_table(spark, sf_dir, "events")  # ts normalized to timestamp
     # persist: the per-slice writes would otherwise re-run the global
     # ntile sort once per slice (this runs inside every streaming
@@ -193,10 +192,10 @@ def write_reshard_replay(spark: SparkSession, sf_dir: str) -> str:
     and key counts are exactly reproducible in a DuckDB oracle."""
     from pyspark.sql.window import Window
 
-    from clj_kinesis_to_firehose_spark.sources.loader import load_table
+    from clj_kinesis_to_firehose_spark.sources.loader import load_table, scratch_dir
 
     ensure_configs(spark)
-    replay_dir = tempfile.mkdtemp(prefix="kf_reshard_")
+    replay_dir = scratch_dir("kf_reshard_")
     raw = load_table(spark, sf_dir, "events")
     b2 = F.expr(_SHARD_BUCKET).cast("long") % 2
     b4 = F.expr(_SHARD_BUCKET).cast("long") % 4

@@ -13,14 +13,15 @@ reference existed to honor, public AWS docs — BASELINE.md):
 * payloads are newline-terminated so Firehose→S3 output is JSON-lines
 
 The chunker and retry loop are pure Python; :func:`delivery_kernel`
-runs them over Arrow batches of :func:`serialize` frames, and
-:func:`deliver_frame` places that kernel by Spark's size estimate of
-the input: a micro-batch estimated at most ``MAX_BATCH_BYTES`` (one
-PutRecordBatch call) is collected as Arrow and delivered in the driver,
-anything larger or of unknown size is delivered by the executors
-(``mapInArrow``). Both write the same files. The client is pluggable —
-a local directory double here, the real ``boto3`` Firehose client in
-production (same interface, config-level swap).
+runs them over Arrow batches of record frames, and
+:func:`deliver_frame` builds those frames in the JVM and places that
+kernel by Spark's size estimate of the input: a micro-batch estimated
+at most ``MAX_BATCH_BYTES`` (one PutRecordBatch call) is collected as
+Arrow and delivered in the driver, anything larger or of unknown size
+is delivered by the executors (``mapInArrow``). Both write the same
+files. The client is pluggable — a local directory double here, the
+real ``boto3`` Firehose client in production (same interface,
+config-level swap).
 """
 
 from __future__ import annotations
@@ -225,7 +226,7 @@ def deliver_records(
     subset is diverted there and delivery CONTINUES with the next batch
     (counted in ``n_dead``) — a single poison record must not wedge the
     stream (the checkpoint would replay the same micro-batch forever).
-    Without one, raises — the opt-in strict mode."""
+    Without one, raises ``RuntimeError``."""
     n_records = n_batches = n_retried = n_dead = 0
     for batch_idx, batch in enumerate(chunk_records(records, terminate=not binary)):
         attempt = 0
@@ -272,24 +273,6 @@ COUNTERS_SCHEMA = "partition_id int, stream string, " + ", ".join(
 )
 
 
-def serialize(df, stream, payload=None, **extra):
-    """The bridge's record frame of ``df``: ``__pid`` (the input
-    partition the record was read in), ``__stream`` (``stream``, a
-    column or column name) and ``__payload`` (bytes; by default the
-    JSON rendering of the whole row, built in the JVM), plus ``extra``
-    columns under their keyword names."""
-    from pyspark.sql import functions as F
-
-    if payload is None:
-        payload = F.to_json(F.struct(*df.columns))
-    return df.select(
-        F.spark_partition_id().alias("__pid"),
-        (F.col(stream) if isinstance(stream, str) else stream).alias("__stream"),
-        payload.cast("binary").alias("__payload"),
-        *[col.alias(name) for name, col in extra.items()],
-    )
-
-
 def delivery_kernel(
     client_factory: Callable[[], FirehoseClient],
     idempotency_tag: str,
@@ -298,11 +281,11 @@ def delivery_kernel(
     codec: Callable[[bytes], bytes] | None = None,
 ):
     """THE delivery kernel: a ``mapInArrow`` function over Arrow
-    batches of :func:`serialize` frames. It groups the records per
-    (input partition, stream) in arrival order, delivers each group
-    with :func:`deliver_records` under the idempotency prefix
-    ``{idempotency_tag}-p{partition}`` through one client per input
-    partition, and yields the counters as :data:`COUNTERS_SCHEMA` rows.
+    batches of :func:`deliver_frame`'s record frames. It groups the
+    records per (input partition, stream) in arrival order, delivers
+    each group with :func:`deliver_records` under the idempotency
+    prefix ``{idempotency_tag}-p{partition}`` through one client per
+    input partition, and yields the counters as :data:`COUNTERS_SCHEMA` rows.
     Keying by the input partition, not the task running the kernel,
     makes the delivered files the same wherever the kernel runs.
 
@@ -344,7 +327,10 @@ def delivery_kernel(
 
 def deliver_frame(df, stream, kernel, payload=None) -> list[dict]:
     """Deliver every record of ``df`` through ``kernel`` and return its
-    counter rows; ``stream`` and ``payload`` as in :func:`serialize`.
+    counter rows. The record frame, built in the JVM, is ``__pid`` (the
+    input partition the record was read in), ``__stream`` (``stream``,
+    a column or column name) and ``__payload`` (``payload`` as bytes;
+    by default the JSON rendering of the whole row).
 
     Placement by Spark's estimate of ``df`` (``estimated_bytes``). At
     most ``MAX_BATCH_BYTES``, the records are collected as one Arrow
@@ -364,9 +350,17 @@ def deliver_frame(df, stream, kernel, payload=None) -> list[dict]:
     of ``perfbench/`` but unbounded for repetitive data: a column of one
     repeated 32 KiB string stores 2000 rows in 14 KB and decodes to 66
     MB. Raise the compression factor for such inputs."""
+    from pyspark.sql import functions as F
+
     from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes
 
-    serialized = serialize(df, stream, payload)
+    if payload is None:
+        payload = F.to_json(F.struct(*df.columns))
+    serialized = df.select(
+        F.spark_partition_id().alias("__pid"),
+        (F.col(stream) if isinstance(stream, str) else stream).alias("__stream"),
+        payload.cast("binary").alias("__payload"),
+    )
     if 0 <= estimated_bytes(df) <= MAX_BATCH_BYTES:
         batches = serialized.toArrow().to_batches()
         return [r for b in kernel(batches) for r in b.to_pylist()]
@@ -380,7 +374,6 @@ def firehose_foreach_batch(
     stream_name_col: str = "event_type",
     fail_first_attempt_every: int = 0,
     client_factory=None,
-    strict: bool = False,
 ):
     """Build a ``foreachBatch`` function implementing the full bridge:
     route by ``stream_name_col`` → JSON-lines serialize → chunk under
@@ -397,18 +390,19 @@ def firehose_foreach_batch(
     placement rewrites the same files instead of duplicating them:
     exactly-once with the streaming checkpoint WAL (SURVEY.md §3.4).
 
-    By default retry-exhausted records divert to ``{out_dir}/errors/``
+    Retry-exhausted records divert to ``{out_dir}/errors/``
     (:class:`DeadLetterDir`) and the stream keeps going — Firehose's
-    error-prefix behavior, and the only liveness-safe default: a raise
+    error-prefix behavior, and the only liveness-safe choice: a raise
     here makes the checkpoint replay the same poison micro-batch
-    forever. ``strict=True`` restores raise-on-exhaustion.
+    forever. Direct callers of :func:`deliver_records` get
+    raise-on-exhaustion with ``dead_letter=None``.
     """
     factory = functools.partial(
         client_factory or LocalDirFirehoseClient,
         out_dir,
         fail_first_attempt_every=fail_first_attempt_every,
     )
-    dead_letter = None if strict else DeadLetterDir(out_dir)
+    dead_letter = DeadLetterDir(out_dir)
 
     def handle(batch_df, epoch_id: int) -> None:
         kernel = delivery_kernel(factory, f"e{epoch_id}", dead_letter=dead_letter)

@@ -2,10 +2,11 @@
 the reference's Kinesis→transform→Firehose job re-expressed as
 readStream → event-time operators → batched sink.
 
-Each pipeline runs bounded here (file replay + availableNow /
-processAllAvailable) and returns the materialized result so the
-driver's rows-only check and pytest can assert on it; the identical
-plan runs unbounded against a Kinesis source in production.
+Each pipeline runs bounded here: a file replay drained by
+:func:`run_bounded` (fresh scratch checkpoint + availableNow), then
+the materialized result is returned so the driver's rows-only check
+and pytest can assert on it; the identical plan runs unbounded
+against a Kinesis source in production.
 
 Scale notes: state is always bounded — watermarks expire window and
 dedup state; the stateful counter keeps one row per user. Shuffle
@@ -23,6 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from clj_kinesis_to_firehose_spark.sources import scratch_dir
@@ -35,21 +37,30 @@ from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
 )
 
 
-def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Run a bounded stream into a memory sink, return the result table."""
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = scratch_dir("kf_chk_")
+def run_bounded(writer: DataStreamWriter) -> StreamingQuery:
+    """THE bounded run of a checkpointed stream: ``writer`` (sink,
+    output mode, query name already set) gets a fresh scratch
+    checkpoint and the availableNow trigger, which drains everything
+    available at start — honouring the source's per-trigger limits
+    such as ``maxFilesPerTrigger`` — and stops. Returns the terminated
+    query (for ``recentProgress``); a failed query re-raises as
+    ``StreamingQueryException``."""
     q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", chk)
+        writer.option("checkpointLocation", scratch_dir("kf_chk_"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    return q
+
+
+def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Run a bounded stream into a memory sink, return the result table."""
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    run_bounded(
+        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    )
+    return stream_df.sparkSession.table(name)
 
 
 def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,21 +168,10 @@ def stream_stateful_counter(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = scratch_dir("kf_chk_")
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # update-mode memory sink appends every emitted update; keep the
     # final (largest) running total per user
     return (
-        spark.table(name)
+        _run_to_memory(counted, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -249,20 +249,8 @@ def _user_stats_group_state(key, pdf_iter, state: GroupState):
 def _drain_update_stream(counted: DataFrame) -> DataFrame:
     """Run an update-mode stateful stream to a memory sink and reduce
     the emitted updates to the final (monotone-max) row per user."""
-    spark = counted.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = scratch_dir("kf_chk_")
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _run_to_memory(counted, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -539,22 +527,17 @@ def stream_firehose_pipeline(
     """
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
     delivery_dir = out_dir or scratch_dir("kf_firehose_")
-    chk = scratch_dir("kf_chk_")
     ev = read_event_stream(spark, replay)
     routed = ev.withColumn(
         "prop_k", F.get_json_object("props", "$.k").cast("long")
     ).filter(F.col("event_type") != "error")  # the bridge's drop-filter
-    q = (
+    run_bounded(
         routed.writeStream.foreachBatch(
             firehose_foreach_batch(
                 delivery_dir, fail_first_attempt_every=fail_first_attempt_every
             )
         )
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     delivered = spark.read.json(os.path.join(delivery_dir, "*.jsonl"))
     return delivered.groupBy("event_type").agg(
         F.count("*").alias("n_delivered"),
@@ -580,21 +563,16 @@ def stream_firehose_dynamic_partition(
     batch caps apply per prefix exactly as per stream."""
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
     delivery_dir = out_dir or scratch_dir("kf_fh_dyn_")
-    chk = scratch_dir("kf_chk_")
     ev = read_event_stream(spark, replay)
     routed = ev.filter(F.col("event_type") != "error").withColumn(
         "__prefix",
         F.concat_ws("/", "event_type", F.date_format("ts", "yyyy/MM/dd")),
     )
-    q = (
+    run_bounded(
         routed.writeStream.foreachBatch(
             firehose_foreach_batch(delivery_dir, stream_name_col="__prefix")
         )
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     delivered = spark.read.json(
         os.path.join(delivery_dir, "*", "*", "*", "*.jsonl")
     )
@@ -638,20 +616,15 @@ def stream_firehose_format_conversion(
 
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
     delivery_dir = out_dir or scratch_dir("kf_fh_pq_")
-    chk = scratch_dir("kf_chk_")
     ev = read_event_stream(spark, replay)
     routed = ev.filter(F.col("event_type") != "error")
-    q = (
+    run_bounded(
         routed.writeStream.foreachBatch(
             firehose_foreach_batch(
                 delivery_dir, client_factory=ParquetConvertingFirehoseClient
             )
         )
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     delivered = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(delivery_dir, "*.parquet")
     )
@@ -712,11 +685,7 @@ def stream_backpressure_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     def record(batch_df: DataFrame, epoch_id: int) -> None:
         seen.append(batch_df.count())
 
-    q = ev.writeStream.foreachBatch(record).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_bounded(ev.writeStream.foreachBatch(record))
     batches = [n for n in seen if n > 0]
     return spark.createDataFrame(
         [(len(batches), int(max(batches)), int(sum(batches)))],
@@ -751,21 +720,13 @@ def stream_reshard_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     replay = write_reshard_replay(spark, sf_dir)
     cap_dir = os.path.join(scratch_dir("kf_reshard_cap_"), "arrivals")
-    chk = scratch_dir("kf_chk_")
 
     def capture(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn("batch_id", F.lit(int(epoch_id))).write.mode(
             "append"
         ).parquet(cap_dir)
 
-    q = (
-        read_reshard_stream(spark, replay)
-        .writeStream.foreachBatch(capture)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_bounded(read_reshard_stream(spark, replay).writeStream.foreachBatch(capture))
 
     arr = spark.read.parquet(cap_dir)
     w = Window.partitionBy("user_id").orderBy("batch_id", "seq")
@@ -880,14 +841,7 @@ def stream_kpl_firehose_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     routed = parsed.filter(F.col("event_type") != "error")
     delivery_dir = scratch_dir("kf_kpl_fh_")
-    chk = scratch_dir("kf_chk_")
-    q = (
-        routed.writeStream.foreachBatch(firehose_foreach_batch(delivery_dir))
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_bounded(routed.writeStream.foreachBatch(firehose_foreach_batch(delivery_dir)))
     delivered = spark.read.json(os.path.join(delivery_dir, "*.jsonl"))
     return delivered.groupBy("event_type").agg(
         F.count("*").alias("n_delivered"),

@@ -893,3 +893,113 @@ def test_compressible_slice_is_placed_by_its_stored_size(spark):
         assert sum(c["n_records"] for c in counters) == 300
         snapshots.append(_snapshot(delivery))
     assert snapshots[0] == snapshots[1]
+
+
+def test_run_bounded_checkpoints_in_scratch_and_reraises_failures(spark):
+    """``run_bounded`` gives every run a fresh checkpoint under the
+    process's scratch root (reclaimed at exit), and a micro-batch that
+    raises surfaces as ``StreamingQueryException`` instead of a query
+    that silently stops."""
+    from pyspark.errors import StreamingQueryException
+
+    from clj_kinesis_to_firehose_spark.sources import loader
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        read_event_stream,
+        write_replay_slices,
+    )
+
+    def checkpoints():
+        root = loader._SCRATCH_ROOT
+        if root is None:
+            return set()
+        return {os.path.join(root, d) for d in os.listdir(root) if d.startswith("kf_chk_")}
+
+    replay = write_replay_slices(spark, SF_DIR, n_slices=4)
+    before = checkpoints()
+    q = pipelines.run_bounded(read_event_stream(spark, replay).writeStream.format("noop"))
+    assert not q.isActive and q.exception() is None
+    new = checkpoints() - before
+    assert len(new) == 1
+    assert os.listdir(os.path.join(new.pop(), "commits"))  # the run committed
+
+    def sink_down(batch_df, epoch_id):
+        raise ValueError("sink down")
+
+    before = checkpoints()
+    with pytest.raises(StreamingQueryException, match="sink down"):
+        pipelines.run_bounded(
+            read_event_stream(spark, replay).writeStream.foreachBatch(sink_down)
+        )
+    assert len(checkpoints() - before) == 1
+
+
+def test_transform_sink_dead_letters_original_payloads(spark, monkeypatch):
+    """Firehose data transformation: Ok records deliver their
+    transformed payload (``value_cents``, no ``value``); ProcessingFailed
+    records land under ``errors/`` with their original payload
+    (``value``, no ``value_cents``) on the first attempt, never retried."""
+    import glob
+    import json
+
+    from clj_kinesis_to_firehose_spark.operators import streaming_ops
+
+    out_dir = tempfile.mkdtemp(prefix="kf_xform_")
+    monkeypatch.setattr(streaming_ops, "scratch_dir", lambda prefix: out_dir)
+    streaming_ops.sink_firehose_transform(spark, SF_DIR).collect()
+
+    def records(pattern):
+        files = glob.glob(os.path.join(out_dir, pattern))
+        return files, [json.loads(line) for f in files for line in open(f, "rb")]
+
+    ok_files, delivered = records("*.jsonl")
+    dead_files, dead = records(os.path.join("errors", "*.jsonl"))
+    assert delivered and dead
+    for r in delivered:
+        assert r["event_type"] != "error" and "value" not in r
+        assert r.keys() == {"event_id", "user_id", "event_type", "value_cents"}
+        assert r["value_cents"] >= 100  # sub-1.0 values are Dropped
+    for r in dead:
+        assert r["event_type"] == "error" and "value_cents" not in r
+        assert {"event_id", "ts", "user_id", "value"} <= r.keys()
+    assert all(f.endswith("-a0.jsonl") for f in ok_files)
+    assert all(f.endswith("-dead.jsonl") for f in dead_files)
+
+
+def test_bounded_runs_and_scratch_dirs_are_defined_once():
+    """Source lint over the package: only ``pipelines.run_bounded``
+    sets a checkpoint location or the availableNow trigger, and only
+    ``loader.scratch_dir`` calls ``tempfile.mkdtemp`` — so every bounded
+    stream gets a fresh checkpoint that is reclaimed at exit."""
+    import ast
+    import pathlib
+
+    import clj_kinesis_to_firehose_spark as pkg
+
+    def owner(call):
+        func = call.func
+        name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+        keywords = {k.arg for k in call.keywords}
+        first = call.args[0].value if call.args and isinstance(call.args[0], ast.Constant) else None
+        if name == "trigger" and "availableNow" in keywords:
+            return "run_bounded"
+        if name in ("option", "options") and (
+            first == "checkpointLocation" or "checkpointLocation" in keywords
+        ):
+            return "run_bounded"
+        if name == "mkdtemp":
+            return "scratch_dir"
+        return None
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+
+    def visit(node, path, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call) and owner(child) not in (None, fn):
+                offenders.append(f"{path}:{child.lineno} ({fn})")
+            inner = child.name if isinstance(child, ast.FunctionDef) else fn
+            visit(child, path, inner)
+
+    for path in sorted(root.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(root), None)
+    assert offenders == []
