@@ -12,20 +12,23 @@ reference existed to honor, public AWS docs — BASELINE.md):
   subset, with capped backoff
 * payloads are newline-terminated so Firehose→S3 output is JSON-lines
 
-The chunker and retry loop are pure Python; :func:`delivery_kernel`
-runs them over Arrow batches of record frames, and
-:func:`deliver_frame` builds those frames in the JVM and places that
-kernel by Spark's size estimate of the input: a micro-batch estimated
-at most ``MAX_BATCH_BYTES`` (one PutRecordBatch call) is collected as
-Arrow and delivered in the driver, anything larger or of unknown size
-is delivered by the executors (``mapInArrow``). Both write the same
-files. The client is pluggable — a local directory double here, the
-real ``boto3`` Firehose client in production (same interface,
-config-level swap).
+The chunk rule (:class:`ChunkAccumulator`) and the put / retry /
+dead-letter loop (:class:`StreamDelivery`) are pure Python, each
+defined once. :func:`delivery_kernel` streams Arrow batches of record
+frames through them and puts each chunk as it closes, while later
+batches are still being produced. :func:`deliver_frame` builds those
+frames in the JVM and places that kernel by Spark's size estimate of
+the input: a micro-batch estimated at most ``MAX_BATCH_BYTES`` (one
+PutRecordBatch call) is collected as Arrow and delivered in the
+driver, anything larger or of unknown size is delivered by the
+executors (``mapInArrow``). Both write the same files. The client is
+pluggable — a local directory double here, the real ``boto3`` Firehose
+client in production (same interface, config-level swap).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import os
@@ -70,15 +73,11 @@ def gunzip_payload(blob: bytes) -> bytes:
     return gzip.decompress(blob)
 
 
-def chunk_records(
-    records: Iterable[bytes], terminate: bool = True
-) -> Iterator[list[bytes]]:
-    """Split newline-terminated payloads into PutRecordBatch-legal
-    batches: ≤500 records AND ≤4 MiB per batch; each record ≤1000 KiB.
-
-    Pure generator — property-tested (tests/test_firehose_sink.py):
-    every emitted batch satisfies both caps and the concatenation of
-    all batches equals the input multiset in order.
+class ChunkAccumulator:
+    """The PutRecordBatch chunk rule, one record at a time: ≤500 records
+    and ≤4 MiB per chunk, each record ≤1000 KiB. :meth:`add` returns the
+    chunk that the record would push past a cap, closed, or ``None``;
+    :meth:`close` returns the chunk still open, or ``None``.
 
     ``terminate=False`` skips newline termination for OPAQUE BINARY
     records (e.g. client-side-gzipped payloads, where a trailing byte
@@ -86,25 +85,49 @@ def chunk_records(
     submitted — compressed size, matching Firehose's accounting of
     what actually crosses the API.
     """
-    batch: list[bytes] = []
-    batch_bytes = 0
-    for rec in records:
-        if terminate:
+
+    def __init__(self, terminate: bool = True) -> None:
+        self.terminate = terminate
+        self.records: list[bytes] = []
+        self.nbytes = 0
+
+    def add(self, rec: bytes) -> list[bytes] | None:
+        if self.terminate:
             rec = newline_terminate(rec)
-        if len(rec) > MAX_RECORD_BYTES:
-            raise RecordTooLargeError(
-                f"record of {len(rec)} bytes exceeds {MAX_RECORD_BYTES}"
-            )
-        if batch and (
-            len(batch) >= MAX_RECORDS_PER_BATCH
-            or batch_bytes + len(rec) > MAX_BATCH_BYTES
-        ):
-            yield batch
-            batch, batch_bytes = [], 0
-        batch.append(rec)
-        batch_bytes += len(rec)
-    if batch:
-        yield batch
+        size = len(rec)
+        if size > MAX_RECORD_BYTES:
+            raise RecordTooLargeError(f"record of {size} bytes exceeds {MAX_RECORD_BYTES}")
+        closed = None
+        if len(self.records) >= MAX_RECORDS_PER_BATCH or self.nbytes + size > MAX_BATCH_BYTES:
+            closed = self.close()
+        self.records.append(rec)
+        self.nbytes += size
+        return closed
+
+    def close(self) -> list[bytes] | None:
+        closed = self.records or None
+        self.records, self.nbytes = [], 0
+        return closed
+
+
+def chunk_records(
+    records: Iterable[bytes], terminate: bool = True
+) -> Iterator[list[bytes]]:
+    """Split payloads into PutRecordBatch-legal batches with
+    :class:`ChunkAccumulator` (``terminate`` as there).
+
+    Pure generator — property-tested (tests/test_firehose_sink.py):
+    every emitted batch satisfies both caps and the concatenation of
+    all batches equals the input multiset in order.
+    """
+    chunks = ChunkAccumulator(terminate)
+    for rec in records:
+        closed = chunks.add(rec)
+        if closed is not None:
+            yield closed
+    closed = chunks.close()
+    if closed is not None:
+        yield closed
 
 
 class FirehoseClient:
@@ -207,6 +230,78 @@ class DeadLetterDir:
             f.writelines(records)
 
 
+#: the delivery counters, of one stream or one kernel output row
+COUNTERS = ("n_records", "n_batches", "n_retried", "n_dead")
+COUNTERS_SCHEMA = "partition_id int, stream string, " + ", ".join(
+    f"{c} long" for c in COUNTERS
+)
+
+
+@dataclasses.dataclass
+class StreamDelivery:
+    """Delivery to one stream, one record at a time: records go into a
+    :class:`ChunkAccumulator` and each chunk is put as soon as it
+    closes (:meth:`_put_chunk`); :meth:`close` puts the last one and
+    returns the :data:`COUNTERS`. Chunk ``n`` is named
+    ``{idempotency_prefix}-{n}-a{attempt}`` (``-dead`` in the dead
+    letter), so the same records in the same order rewrite the same
+    files."""
+
+    client: FirehoseClient
+    stream_name: str
+    max_retries: int = 5
+    backoff_base_s: float = 0.05
+    sleep: Callable[[float], None] = time.sleep
+    idempotency_prefix: str | None = None
+    dead_letter: Callable[..., None] | None = None
+    binary: bool = False
+
+    def __post_init__(self) -> None:
+        self.chunks = ChunkAccumulator(terminate=not self.binary)
+        self.counters = dict.fromkeys(COUNTERS, 0)
+
+    def add(self, record: bytes) -> None:
+        chunk = self.chunks.add(record)
+        if chunk is not None:
+            self._put_chunk(chunk)
+
+    def close(self) -> dict[str, int]:
+        chunk = self.chunks.close()
+        if chunk is not None:
+            self._put_chunk(chunk)
+        return self.counters
+
+    def _put_chunk(self, chunk: list[bytes]) -> None:
+        """Put → resubmit the failed subset with capped exponential
+        backoff → after ``max_retries`` resubmits, divert what still
+        fails to the dead letter, or raise without one."""
+        counters = self.counters
+        prefix = self.idempotency_prefix
+        key = f"{prefix}-{counters['n_batches']}" if prefix else None
+        attempt = 0
+        pending = chunk
+        while pending:
+            kwargs = {"idempotency_key": f"{key}-a{attempt}"} if key else {}
+            failed = self.client.put_record_batch(self.stream_name, pending, **kwargs)
+            counters["n_records"] += len(pending) - len(failed)
+            pending = [pending[i] for i in failed]
+            if pending and attempt >= self.max_retries:
+                if self.dead_letter is None:
+                    raise RuntimeError(
+                        f"{len(pending)} records undeliverable "
+                        f"after {self.max_retries} retries"
+                    )
+                dl_kwargs = {"idempotency_key": f"{key}-dead"} if key else {}
+                self.dead_letter(self.stream_name, pending, **dl_kwargs)
+                counters["n_dead"] += len(pending)
+                pending = []
+            elif pending:
+                counters["n_retried"] += len(pending)
+                self.sleep(min(self.backoff_base_s * (2**attempt), 2.0))
+                attempt += 1
+        counters["n_batches"] += 1
+
+
 def deliver_records(
     records: Iterable[bytes],
     client: FirehoseClient,
@@ -219,58 +314,22 @@ def deliver_records(
     binary: bool = False,
 ) -> dict[str, int]:
     """Chunk → put → resubmit failed subset with capped exponential
-    backoff. Returns delivery counters. At-least-once overall; paired
-    with idempotent batch naming it is effectively-once.
+    backoff (:class:`StreamDelivery`). Returns delivery counters.
+    At-least-once overall; paired with idempotent batch naming it is
+    effectively-once.
 
     On retry exhaustion: with a ``dead_letter`` target, the still-failed
     subset is diverted there and delivery CONTINUES with the next batch
     (counted in ``n_dead``) — a single poison record must not wedge the
     stream (the checkpoint would replay the same micro-batch forever).
     Without one, raises ``RuntimeError``."""
-    n_records = n_batches = n_retried = n_dead = 0
-    for batch_idx, batch in enumerate(chunk_records(records, terminate=not binary)):
-        attempt = 0
-        pending = batch
-        key = f"{idempotency_prefix}-{batch_idx}" if idempotency_prefix else None
-        while pending:
-            kwargs = {"idempotency_key": f"{key}-a{attempt}"} if key else {}
-            failed = client.put_record_batch(stream_name, pending, **kwargs)
-            delivered = len(pending) - len(failed)
-            n_records += delivered
-            if failed:
-                if attempt >= max_retries:
-                    undeliverable = [pending[i] for i in failed]
-                    if dead_letter is None:
-                        raise RuntimeError(
-                            f"{len(undeliverable)} records undeliverable "
-                            f"after {max_retries} retries"
-                        )
-                    dl_kwargs = {"idempotency_key": f"{key}-dead"} if key else {}
-                    dead_letter(stream_name, undeliverable, **dl_kwargs)
-                    n_dead += len(undeliverable)
-                    pending = []
-                    continue
-                pending = [pending[i] for i in failed]
-                n_retried += len(pending)
-                sleep(min(backoff_base_s * (2**attempt), 2.0))
-                attempt += 1
-            else:
-                pending = []
-        n_batches += 1
-    return {
-        "n_records": n_records,
-        "n_batches": n_batches,
-        "n_retried": n_retried,
-        "n_dead": n_dead,
-    }
-
-
-#: the kernel's output: one row of ``deliver_records`` counters per
-#: (input partition, stream)
-COUNTERS = ("n_records", "n_batches", "n_retried", "n_dead")
-COUNTERS_SCHEMA = "partition_id int, stream string, " + ", ".join(
-    f"{c} long" for c in COUNTERS
-)
+    delivery = StreamDelivery(
+        client, stream_name, max_retries, backoff_base_s, sleep,
+        idempotency_prefix, dead_letter, binary,
+    )
+    for rec in records:
+        delivery.add(rec)
+    return delivery.close()
 
 
 def delivery_kernel(
@@ -281,13 +340,19 @@ def delivery_kernel(
     codec: Callable[[bytes], bytes] | None = None,
 ):
     """THE delivery kernel: a ``mapInArrow`` function over Arrow
-    batches of :func:`deliver_frame`'s record frames. It groups the
-    records per (input partition, stream) in arrival order, delivers
-    each group with :func:`deliver_records` under the idempotency
-    prefix ``{idempotency_tag}-p{partition}`` through one client per
-    input partition, and yields the counters as :data:`COUNTERS_SCHEMA` rows.
-    Keying by the input partition, not the task running the kernel,
-    makes the delivered files the same wherever the kernel runs.
+    batches of :func:`deliver_frame`'s record frames. It streams: each
+    record goes to the open chunk of its (input partition, stream)
+    (:class:`StreamDelivery`, idempotency prefix
+    ``{idempotency_tag}-p{partition}``, one client per input
+    partition), and a chunk is put, with its retries and dead letters,
+    as soon as the next record would break a cap — while later Arrow
+    batches are still being produced. So it holds only the open chunks
+    and the batch at hand. When the batches run out it puts the open
+    chunks and yields the counters as :data:`COUNTERS_SCHEMA` rows, one
+    per (input partition, stream). Keying by the input partition, not
+    the task running the kernel, makes the delivered files the same
+    wherever the kernel runs, however the records are cut into Arrow
+    batches.
 
     ``codec`` re-encodes each payload as an opaque binary record (e.g.
     client-side gzip), delivered without newline framing."""
@@ -295,27 +360,32 @@ def delivery_kernel(
     def kernel(batches):
         import pyarrow as pa
 
-        groups: dict[tuple[int, str], list[bytes]] = {}
-        for batch in batches:
-            columns = [batch.column(c).to_pylist() for c in ("__pid", "__stream", "__payload")]
-            for pid, stream, payload in zip(*columns):
-                groups.setdefault((pid, stream), []).append(payload)
         clients: dict[int, FirehoseClient] = {}
-        counters = []
-        for (pid, stream), records in groups.items():
-            if codec is not None:
-                records = [codec(r) for r in records]
-            stats = deliver_records(
-                records,
-                clients.setdefault(pid, client_factory()),
-                stream,
-                max_retries=max_retries,
-                sleep=lambda s: None,
-                idempotency_prefix=f"{idempotency_tag}-p{pid}",
-                dead_letter=dead_letter,
-                binary=codec is not None,
+        streams: dict[tuple[int, str], StreamDelivery] = {}
+        for batch in batches:
+            pids, names, payloads = (
+                batch.column(c).to_numpy(zero_copy_only=False)
+                for c in ("__pid", "__stream", "__payload")
             )
-            counters.append({"partition_id": pid, "stream": stream, **stats})
+            for pid, stream, payload in zip(pids.tolist(), names, payloads):
+                delivery = streams.get((pid, stream))
+                if delivery is None:
+                    if pid not in clients:
+                        clients[pid] = client_factory()
+                    delivery = streams[(pid, stream)] = StreamDelivery(
+                        clients[pid],
+                        stream,
+                        max_retries=max_retries,
+                        sleep=lambda s: None,
+                        idempotency_prefix=f"{idempotency_tag}-p{pid}",
+                        dead_letter=dead_letter,
+                        binary=codec is not None,
+                    )
+                delivery.add(payload if codec is None else codec(payload))
+        counters = [
+            {"partition_id": pid, "stream": stream, **delivery.close()}
+            for (pid, stream), delivery in streams.items()
+        ]
         schema = pa.schema(
             [("partition_id", pa.int32()), ("stream", pa.string())]
             + [(c, pa.int64()) for c in COUNTERS]
@@ -343,13 +413,19 @@ def deliver_frame(df, stream, kernel, payload=None) -> list[dict]:
     The 4 MiB limit bounds driver memory; it is not a measured speed
     crossover. It bounds what Spark estimates, which for a file source
     is the bytes on disk × ``spark.sql.sources.fileCompressionFactor``
-    (default 1.0). The driver holds the decoded records: the Arrow
-    table and one Python ``bytes`` copy of each payload, measured at
-    2.2× the payload bytes. So its peak is the estimate × the input's
-    decoded/stored ratio × 2.2. That ratio is 1.67 for the event slices
-    of ``perfbench/`` but unbounded for repetitive data: a column of one
-    repeated 32 KiB string stores 2000 rows in 14 KB and decodes to 66
-    MB. Raise the compression factor for such inputs."""
+    (default 1.0). The driver holds the decoded records as one Arrow
+    table and, in Python, the Arrow batch at hand and the open chunks
+    (at most 4 MiB each, one per input partition and stream). Measured
+    as the Arrow table plus the kernel's traced Python peak: 2.9× the
+    payload bytes on the compressible slice of
+    ``tests/test_streaming.py`` (300 records, one batch, one stream),
+    1.9× on a 45.6k-record frame of five batches shaped like
+    ``perfbench/``'s slices. So the driver's peak is up to about the
+    estimate × the input's decoded/stored ratio × 3. That
+    ratio is 1.67 for the event slices of ``perfbench/`` but unbounded
+    for repetitive data: a column of one repeated 32 KiB string stores
+    2000 rows in 14 KB and decodes to 66 MB. Raise the compression
+    factor for such inputs."""
     from pyspark.sql import functions as F
 
     from clj_kinesis_to_firehose_spark.sources.loader import estimated_bytes

@@ -292,3 +292,35 @@ def test_binary_chunker_invariants(records):
         assert 1 <= len(b) <= MAX_RECORDS_PER_BATCH
         assert sum(len(r) for r in b) <= MAX_BATCH_BYTES
     assert [r for b in batches for r in b] == list(records)
+
+
+def test_kernel_puts_chunks_before_reading_every_batch(tmp_path):
+    """The kernel streams: a chunk is put as soon as the next record
+    would break its cap, while later Arrow batches are still to come."""
+    import functools
+
+    import pyarrow as pa
+
+    from clj_kinesis_to_firehose_spark.streaming.firehose_sink import delivery_kernel
+
+    def frame(start, n):
+        return pa.RecordBatch.from_pydict({
+            "__pid": pa.array([0] * n, pa.int32()),
+            "__stream": ["s"] * n,
+            "__payload": pa.array([b'{"i": %d}' % i for i in range(start, start + n)]),
+        })
+
+    listed = []
+
+    def batches():
+        for start in range(0, 600, 200):  # the 501st record closes chunk 0
+            yield frame(start, 200)
+        listed.extend(os.listdir(tmp_path))
+        yield frame(600, 200)
+
+    kernel = delivery_kernel(functools.partial(LocalDirFirehoseClient, str(tmp_path)), "e0")
+    [counters] = [r for b in kernel(batches()) for r in b.to_pylist()]
+    assert listed == ["s-e0-p0-0-a0.jsonl"]
+    assert counters == {"partition_id": 0, "stream": "s", "n_records": 800,
+                        "n_batches": 2, "n_retried": 0, "n_dead": 0}
+    assert sorted(os.listdir(tmp_path)) == ["s-e0-p0-0-a0.jsonl", "s-e0-p0-1-a0.jsonl"]

@@ -742,6 +742,35 @@ def test_bridge_distributed_placement_is_byte_identical(spark, fixed_replay):
     assert digest == GOLDEN_DISTRIBUTED
 
 
+def test_bridge_files_do_not_depend_on_arrow_batch_size(spark, fixed_replay):
+    """With 64-record Arrow batches, the kernel's open chunks carry
+    across many batch boundaries; the bridge still writes the golden
+    bytes in both placements."""
+    from clj_kinesis_to_firehose_spark.sources.pyds import register_replay_source
+    from clj_kinesis_to_firehose_spark.sources.streams import read_event_stream
+
+    register_replay_source(spark)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        n_batches = []
+        driver = _bridge_run(
+            spark,
+            read_event_stream(spark, fixed_replay),
+            tempfile.mkdtemp(prefix="kf_arrow64_drv_"),
+            spy=lambda df: n_batches.append(len(df.toArrow().to_batches())),
+        )
+        unsized = spark.readStream.format("kinesis_replay").option("path", fixed_replay).load()
+        distributed = _bridge_run(
+            spark, unsized, tempfile.mkdtemp(prefix="kf_arrow64_dist_"), spy=lambda df: None
+        )
+    finally:
+        spark.conf.set(conf, default)
+    assert n_batches and all(n > 1 for n in n_batches), n_batches
+    assert (driver, distributed) == (GOLDEN_DRIVER, GOLDEN_DISTRIBUTED)
+
+
 def test_bridge_replayed_epoch_creates_no_new_files(spark, fixed_replay):
     """Calling the handle again with the same epoch id — a micro-batch
     replayed after a failure — overwrites its own files, in either
