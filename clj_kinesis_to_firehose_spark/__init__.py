@@ -14,7 +14,7 @@ Layout:
   sources/      batch loaders (parquet + events ns shim) and stream sources
   operators/    SURVEY §2 operator inventory, grouped by category
   functions/    reusable column-expression helpers (vectors, text)
-  streaming/    Firehose-batched sink + streaming pipelines (A4-A7, I4-I7)
+  streaming/    Firehose-batched sink + bounded stream runners (A4-A7, I4-I7)
   plans/        plan-inspection helpers (explain/shuffle audits)
 """
 

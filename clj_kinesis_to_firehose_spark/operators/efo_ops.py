@@ -15,16 +15,16 @@ tests/test_efo.py.
 
 Scale shape: identical to the pull-path replay — one Spark input
 partition per slice, the churn entirely executor-local, zero extra
-shuffles; the aggregation is the same hash groupBy as
-stream_source_faults.
+shuffles; the aggregation and the oracle are stream_source_faults'
+(``streaming_ops.event_type_totals``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from clj_kinesis_to_firehose_spark.registry import register
+from clj_kinesis_to_firehose_spark.operators.streaming_ops import event_type_totals
+from clj_kinesis_to_firehose_spark.registry import oracle, register
 
 
 @register(
@@ -32,35 +32,17 @@ from clj_kinesis_to_firehose_spark.registry import register
     # build executes only when the replay-slice memo is cold (the read
     # itself is a lazy batch DataSource scan) — conditional
     executes_on_build="conditional",
-    oracle="""
-    SELECT event_type,
-           COUNT(*) AS n_records,
-           COUNT(DISTINCT event_id) AS n_ids,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
-             AS sum_value
-    FROM events GROUP BY event_type
-    """,
+    oracle=oracle("stream_source_faults"),
 )
 def stream_efo_push_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clj_kinesis_to_firehose_spark.sources.pyds import (
-        register_replay_source,
-    )
-    from clj_kinesis_to_firehose_spark.sources.streams import (
-        write_replay_slices,
-    )
+    from clj_kinesis_to_firehose_spark.sources.pyds import register_replay_source
+    from clj_kinesis_to_firehose_spark.sources.streams import write_replay_slices
 
     register_replay_source(spark)
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
-    df = (
+    return event_type_totals(
         spark.read.format("kinesis_replay")
         .option("path", replay)
         .option("efo", "true")
         .load()
-    )
-    return df.groupBy("event_type").agg(
-        F.count("*").alias("n_records"),
-        F.countDistinct("event_id").cast("long").alias("n_ids"),
-        F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("sum_value"),
     )

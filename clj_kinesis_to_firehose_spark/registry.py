@@ -114,232 +114,10 @@ _OPERATOR_MODULES = [
 
 _loaded = False
 
-#: Names surfaced FIRST by :func:`queries` / :func:`oracle_sql`.
-#:
-#: The driver's correctness sweep adjudicates the first 50 registered
-#: queries per round (CORRECTNESS_r01/r02 both stop at #50 in dict
-#: order). Rounds 1-2 spent the window on scans/filters/joins/
-#: aggregates, so every SURVEY §2 row in E/F/G/H/I/J/K plus A4-A6 has
-#: local-oracle evidence only. This list rotates those 46 contract
-#: rows into the window, plus the three ops whose checks were just
-#: upgraded from weak to exact (maintenance_compact,
-#: scan_schema_evolution, join_bloom_prefilter) and the headline
-#: join_asof that errored in r02's sweep.
-#:
-#: On top of this static preference, :func:`_prioritized` reads the
-#: committed ``CORRECTNESS_r*.json`` records and pushes every query
-#: that already earned a driver-green row to the back, so the window
-#: self-rotates each round toward never-adjudicated queries without
-#: further edits.
-_PRIORITY = [
-    # r02 fixture-crash stale-ERR ops: these were green in r01, errored
-    # in r02's sweep (fixture ts-type change, since fixed in
-    # sources/loader.py), and their latest driver record is still the
-    # error. They go FIRST so the r04 window re-adjudicates them.
-    "scan_events_ns",
-    "sink_parquet_roundtrip",
-    "route_by_event_type",
-    "join_asof",
-    "agg_count_distinct",
-    "agg_approx_distinct",
-    "agg_bitwise",
-    "agg_hll_sketch",
-    "join_asof_forward",
-    "join_skew_salted",
-    "kinesis_record_envelope",
-    "pipeline_observe_metrics",
-    "route_dead_letter",
-    "scan_dynamic_partition_pruning",
-    "scan_formats_roundtrip",
-    # round-4 additions: snapshot table layer + graph ANN — adjudicate
-    # right behind the red-clearing re-runs (they are themselves
-    # never-adjudicated, so this costs no union coverage)
-    "snapshot_merge_upsert",
-    "snapshot_time_travel",
-    "snapshot_delete_where",
-    "snapshot_compact_roundtrip",
-    "snapshot_changes_feed",
-    "snapshot_stream_upsert",
-    "snapshot_history_log",
-    "snapshot_rollback",
-    "snapshot_schema_evolution",
-    "snapshot_vacuum_lifecycle",
-    "snapshot_pruned_scan",
-    "snapshot_bloom_lookup",
-    "snapshot_write_audit_publish",
-    "snapshot_merge_cdc_apply",
-    "snapshot_replica_sync",
-    "snapshot_corpus_pipeline",
-    "snapshot_incremental_aggregate",
-    "sim_ann_graph",
-    "graph_knn_descent",
-    # A4-A6 (streaming source/sink rows)
-    "stream_source_file",
-    "stream_source_rate",
-    "sink_firehose_batched",
-    # E1-E7 windows
-    "win_row_number",
-    "win_rank_dense",
-    "win_lag_lead",
-    "win_running_sum",
-    "win_moving_avg",
-    "win_ntile",
-    "win_first_last",
-    # F1-F3 sorts
-    "sort_limit_topn",
-    "sort_multi_nulls",
-    "topk_per_group",
-    # G1-G4 set ops
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    # H1-H9 scalar function families
-    "str_funcs",
-    "str_split_explode",
-    "str_regexp",
-    "date_funcs",
-    "math_funcs",
-    "cond_funcs",
-    "array_funcs",
-    "json_extract",
-    "map_funcs",
-    # I1-I7 time windows / streaming
-    "window_tumbling",
-    "window_sliding",
-    "window_session",
-    "stream_tumbling_watermark",
-    "stream_dedup",
-    "stream_stateful_counter",
-    "stream_foreachbatch_sink",
-    # J1-J8 LLM-data ops
-    "dedup_exact",
-    "dedup_near_minhash",
-    "sim_topk_exact",
-    "sim_ann_lsh",
-    "text_wordcount",
-    "text_lang_stats",
-    "text_tfidf_topterms",
-    "multimodal_join",
-    # K1-K5 UDF surfaces
-    "udf_python",
-    "udf_pandas_scalar",
-    "udaf_grouped_agg",
-    "udf_grouped_map",
-    "udtf_python",
-    # weak→exact conversions this round + r02-errored headline
-    "maintenance_compact",
-    "scan_schema_evolution",
-    "join_bloom_prefilter",
-    # round-3-session additions: surface for adjudication right after
-    # the §2 contract rows clear the window
-    "dedup_semantic_prune",
-    "text_ngram_perplexity",
-    "text_bm25_topk",
-    "sim_ann_pq",
-    "join_bucketed_colocated",
-    "join_asof_tolerance",
-    "maintenance_zorder",
-    "corpus_chunk_documents",
-    "sample_importance_weighted",
-    "agg_weighted_percentile",
-    "corpus_cap_per_source",
-    "corpus_realize_mixture",
-    "join_interval_overlap",
-    "text_collocation_pmi",
-    "corpus_shard_manifest",
-    "ts_changepoint_cusum",
-    "graph_link_prediction_jaccard",
-]
-
-
-#: queries whose OUTPUT CONTRACT changed in a later round than their
-#: last driver record: name → first round whose records count. A green
-#: hash from before the change proves the old semantics, so the query
-#: must re-enter the window until a record from >= that round lands.
-#: (r08: decode/resize went from stub-arithmetic outputs to real
-#: BMP/PPM pixel statistics — new schema, new values.)
-_REVALIDATE_AFTER: dict[str, int] = {
-    "multimodal_decode": 8,
-    "multimodal_resize": 8,
-    # r09 changed these ops' compute path / oracle text after their r8
-    # green records (video HALF_UP rounding moved into the Spark plan;
-    # URL-normalization empty-port rule) — require a fresh record.
-    "multimodal_video_decode": 9,
-    "dedup_url_variants": 9,
-    "dedup_incremental_url": 9,
-    "text_url_normalize": 9,
-    # r11 ADVICE fixes changed these ops' compute path / oracle text
-    # after their r10 green records (embedding_outlier_prune: centroid
-    # 6-dp rounding + ordered-fold oracle; the two streaming ops:
-    # scratch-dir allocation and explicit prior-epoch index reads) —
-    # require a fresh record.
-    "embedding_outlier_prune": 11,
-    # (stream_span_index_ingest's r11 entry is subsumed by its r12
-    # re-prove below — one key, the later bound)
-    "stream_corpus_admission": 11,
-    # r11 review pass extracted the band-candidate join + jaccard
-    # verify into shared llm_dedup helpers; dedup_near_minhash's plan
-    # is expression-identical but the compute path was touched —
-    # re-prove it.
-    "dedup_near_minhash": 11,
-    # r12 changes after r11 green records: the perceptual hash widened
-    # from 16 to 64 bits (AHASH_DIM 4→8 — new phash values, new pair
-    # set), corpus_quality_histogram moved from ROUND(double) to
-    # integer 1e-8 ratio units (new schema, new comparator — r11
-    # ADVICE), and dedup_lsh_calibration gained the id-space
-    # assert_true guard (plan change) — all need fresh records.
-    "multimodal_image_phash": 12,
-    "multimodal_phash_dup_pairs": 12,
-    "corpus_quality_histogram": 12,
-    "dedup_lsh_calibration": 12,
-    # r12 extracted the BPE selection step / training dictionary into
-    # shared helpers (_bpe_top_pair, _bpe_len2_dictionary) so the
-    # scaled learner iterates the same rule — plans are
-    # expression-identical but the compute path was touched (the r11
-    # dedup_near_minhash precedent): re-prove both.
-    "bpe_learn_merges": 12,
-    "bpe_tokenize_apply": 12,
-    # r12 extracted the replay-safe prior-epoch enumeration into
-    # sources.prior_epoch_paths (shared with the image index ingest) —
-    # expression-identical read path, but touched: re-prove.
-    "stream_span_index_ingest": 12,
-    # r14 routed the probe-style candidate joins through the shared
-    # gate_oversized flood guard, with the oracles gated in lockstep
-    # (incremental_phash's oracle also moved from brute-force hamming
-    # to the gated band-join form) — fixture outputs are unchanged
-    # (n_oversized = 0 everywhere) but the compute path and oracle
-    # text were touched: re-prove all three.
-    "multimodal_phash_multiprobe_pairs": 14,
-    "dedup_incremental_phash": 14,
-    "dedup_incremental_minhash": 14,
-    # r14 rewrote the scaled BT fit's compute path (distributed 64-iter
-    # MM loop → driver-side loop over the one collected win matrix);
-    # its r13 green hash proves the OLD path — re-prove the new one
-    # against the same 64-level unrolled CTE oracle.
-    "pref_bt_strength_scaled": 14,
-    # r15 ADVICE fixes changed these ops' compute path / oracle text
-    # after their r14 green records (preflight: NULL-safe skew_flag;
-    # chi2: integer-div mid-epoch; prefix_share: byte-order-stable
-    # neighbor sort in BOTH engines) — require a fresh record.
-    "join_cardinality_preflight": 15,
-    "dq_feature_drift_chi2": 15,
-    "corpus_prefix_share": 15,
-    # r15 extended the recall grid to the fourth (graph) family — 20
-    # rows now, new oracle text: the r14 15-row hash is stale.
-    "sim_recall_eval": 15,
-    # r15 factored the components oracle's closure CTEs into the
-    # shared _COMPONENT_CTES block (consumed by dedup_survivorship) —
-    # same output, new oracle text: re-prove.
-    "dedup_cluster_components": 15,
-}
-
-
 def _latest_records(root: str | None = None) -> dict[str, tuple[int, dict]]:
     """(round, row) of each query's LATEST driver record across the
-    committed CORRECTNESS_r*.json files, read in round order and
-    filtered by :data:`_REVALIDATE_AFTER`. ``root`` overrides the
-    record directory (tests); default repo root."""
+    committed CORRECTNESS_r*.json files, read in round order. ``root``
+    overrides the record directory (tests); default repo root."""
     import glob
     import json
     import os
@@ -360,7 +138,7 @@ def _latest_records(root: str | None = None) -> dict[str, tuple[int, dict]]:
         if not isinstance(data, dict):
             continue
         for name, row in data.items():
-            if isinstance(row, dict) and rnd >= _REVALIDATE_AFTER.get(name, 0):
+            if isinstance(row, dict):
                 latest[name] = (rnd, row)
     return latest
 
@@ -396,29 +174,25 @@ def _adjudicated_names(root: str | None = None) -> set[str]:
 
 def _prioritized(d: dict, seen: set[str] | None = None) -> dict:
     """Order ``d`` so the driver's fixed-size sweep window lands on the
-    queries that need adjudication most: (1) the static §2 preference
-    list, minus already-green entries; (2) every other query without a
-    driver-green row, in registration order; (3) the already-green
+    queries that need adjudication most: (1) every query without a
+    driver-green row, in registration order; (2) the already-green
     rest, STALEST DRIVER RECORD FIRST — with every query adjudicated
     at some round, the window becomes a freshness rotation that
-    re-proves the oldest cohort (r2/r3 agg/window/scalar core) under
-    the current driver and fixtures instead of replaying registration
-    order (r13 verdict #5). ``seen`` overrides the adjudicated set
-    (tests pin a record fixture via ``_adjudicated_names(root=...)``);
-    with an override the tail keeps registration order (no rounds to
-    sort by)."""
+    re-proves the oldest cohort under the current driver and fixtures
+    instead of replaying registration order (r13 verdict #5). ``seen``
+    overrides the adjudicated set (tests pin a record fixture via
+    ``_adjudicated_names(root=...)``); with an override the tail keeps
+    registration order (no rounds to sort by)."""
     rounds: dict[str, int] = {}
     if seen is None:
         seen, rounds = _green_and_rounds()
-    head = {n: d[n] for n in _PRIORITY if n in d and n not in seen}
-    mid = {n: v for n, v in d.items() if n not in head and n not in seen}
+    head = {n: v for n, v in d.items() if n not in seen}
     reg_index = {n: i for i, n in enumerate(d)}
     tail_names = sorted(
-        (n for n in d if n not in head and n not in mid),
+        (n for n in d if n in seen),
         key=lambda n: (rounds.get(n, 0), reg_index[n]),
     )
-    tail = {n: d[n] for n in tail_names}
-    return head | mid | tail
+    return head | {n: d[n] for n in tail_names}
 
 
 def register(

@@ -47,9 +47,13 @@ def build_spark(app_name: str = "kf-spark", cpus: int | None = None) -> SparkSes
     (:mod:`clj_kinesis_to_firehose_spark.pyworker`), which spares every
     Python task PySpark's re-read of each zip archive on the worker's
     import path, a fixed cost of every task on CPython 3.10-3.11.
-    Workers import that module the way they import the operators' UDFs:
-    from the working directory or ``PYTHONPATH``."""
+    Workers import that module, like the operators' UDFs, from the
+    package's parent directory: the session puts it on
+    ``spark.executorEnv.PYTHONPATH``, which PySpark merges into the
+    workers' path, so a session started from any directory runs Python
+    tasks."""
     cpus = cpus or default_parallelism()
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -59,6 +63,7 @@ def build_spark(app_name: str = "kf-spark", cpus: int | None = None) -> SparkSes
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "clj_kinesis_to_firehose_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     )

@@ -57,24 +57,6 @@ def test_survey_contract_names_registered():
     assert len(SURVEY_S2_NAMES) == 77
 
 
-def test_priority_rotation_is_registered_and_window_sized():
-    q = registry.queries()
-    missing = [n for n in registry._PRIORITY if n not in q]
-    assert not missing, f"_PRIORITY names not registered: {missing}"
-    # the driver adjudicates 50 queries/round; the §2 contract block
-    # (first 50 entries) fills one window, and later entries queue for
-    # the next round's rotation — the list may exceed one window but
-    # must never leave a contract row outside the first 50
-    assert len(registry._PRIORITY) >= 50
-    unadjudicated_head = [
-        n for n in registry._PRIORITY[:50] if n not in registry._adjudicated_names()
-    ]
-    window = list(registry.queries())[:50]
-    assert all(n in window for n in unadjudicated_head), (
-        "contract rows displaced from the driver window"
-    )
-
-
 def test_rotation_puts_unadjudicated_queries_first():
     q = registry.queries()
     seen = registry._adjudicated_names()
@@ -84,9 +66,6 @@ def test_rotation_puts_unadjudicated_queries_first():
     # every slot of the driver's window goes to a query without a
     # driver-green row (until none remain)
     assert all(n not in seen for n in window), [n for n in window if n in seen]
-    # and priority names that still need adjudication lead the order
-    pri_unseen = [n for n in registry._PRIORITY if n not in seen]
-    assert names[: len(pri_unseen)] == pri_unseen
 
 
 def test_kinesis_envelope_decode_matches_event_stream_schema(spark):

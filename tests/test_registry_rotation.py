@@ -59,38 +59,3 @@ def test_malformed_round_file_ignored(tmp_path):
     (tmp_path / "CORRECTNESS_r01.json").write_text("{not json")
     _write_round(tmp_path, 2, {"op_a": GREEN})
     assert registry._adjudicated_names(root=str(tmp_path)) == {"op_a"}
-
-
-def test_priority_names_all_registered():
-    """Every name in the static priority list must actually be a
-    registered query — a typo here would silently waste a rotation
-    slot."""
-    q = registry.queries()
-    missing = [n for n in registry._PRIORITY if n not in q]
-    assert not missing, f"priority list names unknown queries: {missing}"
-
-
-def test_r04_window_contains_stale_err_ops():
-    """The fix's acceptance check, as a regression test: with the
-    PINNED r01-r03 record fixture (tests/fixtures/rotation_records_r03,
-    a snapshot of the repo records as of round 4's start), all 15 ops
-    whose latest record is the r02 fixture crash land in the first-50
-    window. Pinning via ``_adjudicated_names(root=...)`` keeps this
-    green as later driver rounds legitimately rotate those now-green
-    ops out of the live window (round-4 judge finding #1)."""
-    import pathlib
-
-    fixture = pathlib.Path(__file__).parent / "fixtures" / "rotation_records_r03"
-    stale = [
-        "scan_events_ns", "sink_parquet_roundtrip", "route_by_event_type",
-        "join_asof", "agg_count_distinct", "agg_approx_distinct",
-        "agg_bitwise", "agg_hll_sketch", "join_asof_forward",
-        "join_skew_salted", "kinesis_record_envelope",
-        "pipeline_observe_metrics", "route_dead_letter",
-        "scan_dynamic_partition_pruning", "scan_formats_roundtrip",
-    ]
-    registry._load_all()
-    seen = registry._adjudicated_names(root=str(fixture))
-    window = list(registry._prioritized(registry._QUERIES, seen=seen))[:50]
-    missing = [s for s in stale if s not in window]
-    assert not missing, f"stale-ERR ops missing from window: {missing}"

@@ -15,10 +15,8 @@ from clj_kinesis_to_firehose_spark.operators.curation_r15 import (
     PACK_TOKEN_BUDGET,
 )
 from tests.conftest import SF_DIR
-from tests.helpers import assert_oracle_match
 
 QUERIES = registry.queries()
-ORACLES = registry.oracle_sql()
 
 
 @pytest.fixture(scope="module")
@@ -27,23 +25,6 @@ def greedy_rows(spark):
     FFD-comparison, stability, and report-consistency tests (one
     execution instead of four)."""
     return QUERIES["corpus_pack_greedy"](spark, SF_DIR).collect()
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "corpus_pack_greedy",
-        "corpus_pack_ffd",
-        "corpus_pack_incremental",
-        "corpus_batch_by_length",
-        "corpus_pack_report",
-        "corpus_epoch_shuffle",
-    ],
-)
-def test_oracle_match(spark, oracle_con, name):
-    assert_oracle_match(
-        QUERIES[name](spark, SF_DIR), ORACLES[name], oracle_con, name
-    )
 
 
 def test_pack_greedy_law(spark, greedy_rows):

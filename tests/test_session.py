@@ -21,3 +21,29 @@ def test_python_tasks_run_under_the_engines_daemon(spark):
 
     reports = set(spark.sparkContext.parallelize([0, 1], 2).mapPartitions(probe).collect())
     assert reports == {("clj_kinesis_to_firehose_spark.pyworker", sys.version_info < (3, 12))}
+
+
+def test_python_tasks_run_from_outside_the_repository(tmp_path):
+    """A session built from another working directory, with the package
+    only on the driver's ``sys.path`` (no ``PYTHONPATH``), still runs
+    Python tasks: the workers find the engine's daemon module."""
+    import os
+    import pathlib
+    import subprocess
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    script = (
+        f"import sys; sys.path.insert(0, {str(repo)!r})\n"
+        "from clj_kinesis_to_firehose_spark.session import build_spark\n"
+        "spark = build_spark('elsewhere', cpus=1)\n"
+        "print(spark.sparkContext.parallelize([1, 2], 1).map(lambda x: x + 1).collect())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout.strip().splitlines()[-1] == "[2, 3]"

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.sources.streams import EVENTS_RAW_SCHEMA
-from clj_kinesis_to_firehose_spark.streaming import pipelines
+from clj_kinesis_to_firehose_spark.operators import streaming_ops
 from tests.conftest import SF_DIR
 
 
@@ -69,7 +69,7 @@ def late_replay_dir(spark):
 
 
 def test_watermark_drops_late_rows(spark, late_replay_dir):
-    out = pipelines.stream_tumbling_watermark(
+    out = streaming_ops.stream_tumbling_watermark(
         spark, SF_DIR, replay_dir=late_replay_dir
     ).collect()
     counts = {(r["wstart"].hour, r["event_type"]): r["n_events"] for r in out}
@@ -83,7 +83,7 @@ def test_watermark_drops_late_rows(spark, late_replay_dir):
 def test_stream_dedup_removes_injected_duplicates(spark, oracle_con):
     res = {
         r["event_type"]: r["n_unique"]
-        for r in pipelines.stream_dedup(spark, SF_DIR).collect()
+        for r in streaming_ops.stream_dedup(spark, SF_DIR).collect()
     }
     exact = dict(
         oracle_con.execute(
@@ -96,7 +96,7 @@ def test_stream_dedup_removes_injected_duplicates(spark, oracle_con):
 def test_stateful_counter_matches_batch(spark, oracle_con):
     res = {
         r["user_id"]: (r["n_events"], r["sum_value"])
-        for r in pipelines.stream_stateful_counter(spark, SF_DIR).collect()
+        for r in streaming_ops.stream_stateful_counter(spark, SF_DIR).collect()
     }
     exact = {
         u: (n, s)
@@ -111,7 +111,7 @@ def test_firehose_pipeline_with_partial_failures(spark, oracle_con):
     # inject a failure on every 5th record's first attempt; retry must
     # recover every record exactly once (idempotent batch naming)
     out_dir = tempfile.mkdtemp(prefix="kf_e2e_")
-    res = pipelines.stream_firehose_pipeline(
+    res = streaming_ops.stream_foreachbatch_sink(
         spark, SF_DIR, out_dir=out_dir, fail_first_attempt_every=5
     )
     got = {r["event_type"]: (r["n_delivered"], r["n_unique"]) for r in res.collect()}
@@ -175,7 +175,7 @@ def test_checkpoint_restart_delivers_exactly_once(spark):
 
 
 def test_backpressure_bounds_microbatches(spark):
-    row = pipelines.stream_backpressure_trigger(spark, SF_DIR).collect()[0]
+    row = streaming_ops.stream_backpressure_trigger(spark, SF_DIR).collect()[0]
     total = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     assert row.total_rows == total  # nothing lost draining the backlog
     assert row.n_batches >= 4  # one slice per trigger, never a mega-batch
@@ -418,7 +418,7 @@ def test_stateful_counter_on_rocksdb_state_store(spark, oracle_con):
     try:
         res = {
             r["user_id"]: (r["n_events"], r["sum_value"])
-            for r in pipelines.stream_stateful_counter(spark, SF_DIR).collect()
+            for r in streaming_ops.stream_stateful_counter(spark, SF_DIR).collect()
         }
     finally:
         if prev is None:
@@ -936,6 +936,7 @@ def test_run_bounded_checkpoints_in_scratch_and_reraises_failures(spark):
         read_event_stream,
         write_replay_slices,
     )
+    from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
     def checkpoints():
         root = loader._SCRATCH_ROOT
@@ -945,7 +946,7 @@ def test_run_bounded_checkpoints_in_scratch_and_reraises_failures(spark):
 
     replay = write_replay_slices(spark, SF_DIR, n_slices=4)
     before = checkpoints()
-    q = pipelines.run_bounded(read_event_stream(spark, replay).writeStream.format("noop"))
+    q = run_bounded(read_event_stream(spark, replay).writeStream.format("noop"))
     assert not q.isActive and q.exception() is None
     new = checkpoints() - before
     assert len(new) == 1
@@ -956,7 +957,7 @@ def test_run_bounded_checkpoints_in_scratch_and_reraises_failures(spark):
 
     before = checkpoints()
     with pytest.raises(StreamingQueryException, match="sink down"):
-        pipelines.run_bounded(
+        run_bounded(
             read_event_stream(spark, replay).writeStream.foreachBatch(sink_down)
         )
     assert len(checkpoints() - before) == 1
@@ -969,8 +970,6 @@ def test_transform_sink_dead_letters_original_payloads(spark, monkeypatch):
     (``value``, no ``value_cents``) on the first attempt, never retried."""
     import glob
     import json
-
-    from clj_kinesis_to_firehose_spark.operators import streaming_ops
 
     out_dir = tempfile.mkdtemp(prefix="kf_xform_")
     monkeypatch.setattr(streaming_ops, "scratch_dir", lambda prefix: out_dir)
@@ -1031,4 +1030,46 @@ def test_bounded_runs_and_scratch_dirs_are_defined_once():
 
     for path in sorted(root.rglob("*.py")):
         visit(ast.parse(path.read_text()), path.relative_to(root), None)
+    assert offenders == []
+
+
+def test_registered_queries_are_built_where_registered():
+    """Source lint over the operator modules: no ``@register``ed query
+    is a pass-through whose body (docstring aside) is only
+    ``return <module>.<fn>(spark, sf_dir)`` — a query is registered
+    where its DataFrame is built, not over a layer in another module."""
+    import ast
+    import pathlib
+
+    import clj_kinesis_to_firehose_spark as pkg
+
+    def registered(fn):
+        return any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in fn.decorator_list
+        )
+
+    def pass_through(fn):
+        body = fn.body
+        if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+            body = body[1:]  # the docstring
+        if len(body) != 1 or not isinstance(body[0], ast.Return):
+            return False
+        call = body[0].value
+        params = [a.arg for a in fn.args.args[:2]]
+        return (
+            isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and isinstance(call.func.value, ast.Name)
+            and not call.keywords
+            and [getattr(a, "id", None) for a in call.args] == params
+        )
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno} {node.name}"
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.FunctionDef) and registered(node) and pass_through(node)
+    ]
     assert offenders == []
