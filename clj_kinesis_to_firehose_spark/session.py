@@ -35,6 +35,14 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
 }
 
+#: The streaming checkpoint manager of the engine's own sessions (see
+#: ``build_spark``). Spark 4.1 moved it from ``…execution.streaming.``
+#: to ``…execution.streaming.checkpointing.``.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -51,7 +59,25 @@ def build_spark(app_name: str = "kf-spark", cpus: int | None = None) -> SparkSes
     package's parent directory: the session puts it on
     ``spark.executorEnv.PYTHONPATH``, which PySpark merges into the
     workers' path, so a session started from any directory runs Python
-    tasks."""
+    tasks.
+
+    Streaming checkpoints (the offset, commit and source logs of every
+    micro-batch, and the RocksDB state stores' files) are written by
+    :data:`CHECKPOINT_FILE_MANAGER`, Spark's ``FileSystem``-based
+    manager, instead of its default ``FileContext``-based one. Both
+    write each log entry to a temp file and rename it into place. On
+    the local filesystem without ``libhadoop``, the ``FileContext``
+    path forks ``readlink`` and ``chmod`` for every file it creates or
+    renames. Measured over 16-batch bounded runs with a no-op
+    ``foreachBatch`` on a 4-core host (medians per micro-batch, three
+    runs each): 62-66 process and thread ids allocated against 13-17,
+    ``latestOffset`` 33-42 → 8-9.5 ms, ``walCommit`` 31-43.5 → 8-9 ms,
+    ``commitOffsets`` 30.5-41.5 → 8-10 ms and the whole trigger
+    143-202 → 83-95 ms. Only this builder sets it: its sessions
+    are always ``local[N]``, where those forks come from. A foreign
+    session, possibly checkpointing to HDFS or S3, keeps Spark's default
+    and ``FileContext``'s atomic overwrite-rename, so the conf is not in
+    :data:`RUNTIME_CONFS`."""
     cpus = cpus or default_parallelism()
     package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
@@ -64,6 +90,7 @@ def build_spark(app_name: str = "kf-spark", cpus: int | None = None) -> SparkSes
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "clj_kinesis_to_firehose_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", package_parent)
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     )

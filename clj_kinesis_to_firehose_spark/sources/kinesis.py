@@ -105,8 +105,8 @@ def read_kinesis_stream(
 ) -> DataFrame:
     """Build the production event stream: Kinesis envelope → decoded
     JSON events with the same schema the replay double produces, so
-    every downstream pipeline in ``streaming/pipelines.py`` runs
-    unchanged.
+    every downstream pipeline registered in
+    ``operators/streaming_ops.py`` runs unchanged.
 
     Raises KinesisConnectorUnavailable offline (no connector jar in
     this container) — see sources/streams.py for the tested double.

@@ -47,3 +47,21 @@ def test_python_tasks_run_from_outside_the_repository(tmp_path):
     )
     assert run.returncode == 0, run.stderr[-2000:]
     assert run.stdout.strip().splitlines()[-1] == "[2, 3]"
+
+
+def test_streaming_checkpoints_use_the_filesystem_manager(spark, tmp_path):
+    """Streaming checkpoints of the engine's sessions go through Spark's
+    ``FileSystem``-based manager, which on the local filesystem forks
+    far fewer processes per log entry. The class named in the conf
+    must load: a Spark upgrade that moves it (as 4.1 moved
+    it into ``…streaming.checkpointing``) fails here by name, not as
+    every streaming query failing to start."""
+    from clj_kinesis_to_firehose_spark.session import CHECKPOINT_FILE_MANAGER
+
+    jvm = spark._jvm
+    assert jvm.java.lang.Class.forName(CHECKPOINT_FILE_MANAGER).getName() == CHECKPOINT_FILE_MANAGER
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == CHECKPOINT_FILE_MANAGER

@@ -134,7 +134,10 @@ def test_checkpoint_restart_delivers_exactly_once(spark):
     """Stop/restart against the same checkpoint: slices delivered before
     the stop must NOT be redelivered after restart (WAL offsets + the
     idempotent sink = exactly-once across restarts — the property the
-    reference's at-least-once bridge cannot give)."""
+    reference's at-least-once bridge cannot give). The restart reads
+    back the offset, commit and source logs the first run wrote, so it
+    also proves the session's checkpoint manager writes logs Spark can
+    resume from."""
     from clj_kinesis_to_firehose_spark.sources.streams import read_event_stream
     from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
         firehose_foreach_batch,
@@ -155,23 +158,28 @@ def test_checkpoint_restart_delivers_exactly_once(spark):
             .start()
         )
         q.awaitTermination()
+        return [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+
+    def logged_batches(log):
+        return sorted(int(f) for f in os.listdir(os.path.join(chk, log)) if f.isdigit())
 
     # phase 1: two slices, first run
     _write_slice(spark, [_ev(i, T0 + i * 60 * NS) for i in range(10)],
                  os.path.join(replay, "s0"))
     _write_slice(spark, [_ev(i, T0 + i * 60 * NS) for i in range(10, 20)],
                  os.path.join(replay, "s1"))
-    run_pipeline()
+    assert run_pipeline() == [0, 1]
     first = spark.read.json(os.path.join(delivery, "*.jsonl"))
     assert first.count() == 20
 
     # phase 2: one more slice lands, restart from the same checkpoint
     _write_slice(spark, [_ev(i, T0 + i * 60 * NS) for i in range(20, 30)],
                  os.path.join(replay, "s2"))
-    run_pipeline()
+    assert run_pipeline() == [2]  # resumes after the committed batches
+    assert logged_batches("offsets") == logged_batches("commits") == [0, 1, 2]
     final = spark.read.json(os.path.join(delivery, "*.jsonl"))
     assert final.count() == 30  # 20 old NOT redelivered + 10 new
-    assert final.select("event_id").distinct().count() == 30
+    assert sorted(r.event_id for r in final.select("event_id").collect()) == list(range(30))
 
 
 def test_backpressure_bounds_microbatches(spark):
