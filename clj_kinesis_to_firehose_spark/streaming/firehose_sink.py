@@ -9,7 +9,8 @@ reference existed to honor, public AWS docs — BASELINE.md):
 * ≤ 4 MiB total per call
 * ≤ 1000 KiB per record (pre-base64)
 * the API returns per-record failures → resubmit only the failed
-  subset, with capped backoff
+  subset, with capped backoff (:func:`deliver_records`; the
+  :func:`delivery_kernel` resubmits at once, see there)
 * payloads are newline-terminated so Firehose→S3 output is JSON-lines
 
 The chunk rule (:class:`ChunkAccumulator`) and the put / retry /
@@ -355,7 +356,16 @@ def delivery_kernel(
     batches.
 
     ``codec`` re-encodes each payload as an opaque binary record (e.g.
-    client-side gzip), delivered without newline framing."""
+    client-side gzip), delivered without newline framing.
+
+    The kernel resubmits a failed subset immediately, without the
+    backoff of :func:`deliver_records`: the local double
+    (:class:`LocalDirFirehoseClient`) fails a record only on its first
+    sighting (a poison record on every one), so a wait changes no
+    outcome and would add at least ``backoff_base_s`` to every put with
+    a failure. A throttled real ``PutRecordBatch`` client would spend
+    its ``max_retries`` at once and dead-letter records a backoff would
+    deliver."""
 
     def kernel(batches):
         import pyarrow as pa
