@@ -317,7 +317,8 @@ def main() -> None:
                 # process-wide replay memo exists for the test suite,
                 # not the stopwatch — dropped here so every run pays
                 # the same scaffold cost the documented protocol and
-                # prior rounds' single-shot numbers paid
+                # prior rounds' single-shot numbers paid (the memo holds
+                # the documents replays too, so those are dropped as well)
                 from clj_kinesis_to_firehose_spark.sources import streams
 
                 streams._REPLAY_CACHE.clear()

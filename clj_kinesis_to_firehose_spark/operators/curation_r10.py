@@ -35,6 +35,11 @@ from clj_kinesis_to_firehose_spark.sources import (
     load_table,
     scratch_dir,
 )
+from clj_kinesis_to_firehose_spark.sources.streams import (
+    DOCS_RAW_SCHEMA,
+    read_replay,
+    write_doc_replay,
+)
 from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
 
 # --- dedup_substring_spans -------------------------------------------------
@@ -1553,53 +1558,6 @@ def corpus_admission_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- stream_corpus_admission ---------------------------------------------
 
-#: documents replay schema (doc_id-ordered parquet slices).
-DOCS_RAW_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-#: process-lifetime memo of document replay dirs — same contract as
-#: streams._REPLAY_CACHE: deterministic content, read-only consumers,
-#: immutable fixture (r13 suite-wall-clock item).
-_DOC_SLICE_CACHE: dict[tuple, str] = {}
-
-
-def _write_doc_slices(spark: SparkSession, sf_dir: str, n_slices: int) -> str:
-    """Materialize documents as n_slices doc_id-ordered parquet files
-    with stamped mtimes — the documents twin of
-    sources.streams.write_replay_slices; the file stream picks slices
-    up as separate micro-batches (maxFilesPerTrigger=1)."""
-    import os
-
-    from clj_kinesis_to_firehose_spark.sources.streams import (
-        _stamp_slice_order,
-    )
-
-    cached = _DOC_SLICE_CACHE.get((sf_dir, n_slices))
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    docs = load_table(spark, sf_dir, "documents")
-    replay_dir = scratch_dir("kf_docs_replay_")
-    sliced = docs.withColumn(
-        "__slice", F.ntile(n_slices).over(Window.orderBy("doc_id")) - 1
-    ).persist()
-    try:
-        for i in range(n_slices):
-            (
-                sliced.filter(F.col("__slice") == i)
-                .drop("__slice")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(replay_dir, f"slice={i}"))
-            )
-    finally:
-        sliced.unpersist()
-    _stamp_slice_order(replay_dir)
-    _DOC_SLICE_CACHE[(sf_dir, n_slices)] = replay_dir
-    return replay_dir
-
-
 @register("stream_corpus_admission", executes_on_build=True, oracle=_SQL_ADMISSION)
 def stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus admission IN the ingest stream: documents arrive as
@@ -1623,7 +1581,7 @@ def stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     decisions append straight to the output table; nothing collects.
     """
     docs = load_table(spark, sf_dir, "documents")
-    replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
+    replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
 
     # corpus-level attribute indexes, MATERIALIZED once before the
     # stream (parquet tables — per-batch joins read these, they never
@@ -1705,10 +1663,7 @@ def stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
     run_bounded(
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
         .writeStream.foreachBatch(admit_batch)
     )
     return spark.read.option("recursiveFileLookup", "true").parquet(
@@ -1910,9 +1865,7 @@ def stream_span_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle derives the same doc_id-ordered batch assignment with
     NTILE — exact, because slice order is stamped deterministically.
     """
-    import os
-
-    replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
+    replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     index_dir = scratch_dir("kf_span_idx_")
     out_dir = scratch_dir("kf_span_ingest_out_")
     # initialize an EMPTY index (epoch column = which batch added the
@@ -1995,10 +1948,7 @@ def stream_span_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_h.write.mode("overwrite").parquet(f"{index_dir}/epoch_{epoch}")
 
     run_bounded(
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
         .writeStream.foreachBatch(ingest_batch)
     )
     return spark.read.option("recursiveFileLookup", "true").parquet(

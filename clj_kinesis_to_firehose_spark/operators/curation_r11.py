@@ -917,13 +917,14 @@ def stream_vocab_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed OVERWRITE writes keep at-least-once re-execution idempotent
     (same rows to the same path), per the streaming-ops house rule.
     """
-    from clj_kinesis_to_firehose_spark.operators.curation_r10 import (
-        DOCS_RAW_SCHEMA,
-        _write_doc_slices,
-    )
     from clj_kinesis_to_firehose_spark.sources import scratch_dir
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        DOCS_RAW_SCHEMA,
+        read_replay,
+        write_doc_replay,
+    )
 
-    replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
+    replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     out_dir = scratch_dir("kf_vocab_ingest_")
 
     def count_batch(batch_df: DataFrame, epoch: int) -> None:
@@ -940,10 +941,7 @@ def stream_vocab_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
     run_bounded(
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
         .writeStream.foreachBatch(count_batch)
     )
     merged = (
@@ -1642,11 +1640,12 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (epoch-keyed OVERWRITE parquet, idempotent under at-least-once
     re-execution).
     """
-    from clj_kinesis_to_firehose_spark.operators.curation_r10 import (
-        DOCS_RAW_SCHEMA,
-        _write_doc_slices,
-    )
     from clj_kinesis_to_firehose_spark.sources import scratch_dir
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        DOCS_RAW_SCHEMA,
+        read_replay,
+        write_doc_replay,
+    )
 
     vocab_dir = scratch_dir("kf_oovmon_vocab_")
     (
@@ -1656,7 +1655,7 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(vocab_dir)
     )
     vocab = spark.read.parquet(vocab_dir).withColumn("in_v", F.lit(1))
-    replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
+    replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     out_dir = scratch_dir("kf_oovmon_out_")
 
     def monitor_batch(batch_df: DataFrame, epoch: int) -> None:
@@ -1685,10 +1684,7 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         row.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
     run_bounded(
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
         .writeStream.foreachBatch(monitor_batch)
     )
     return spark.read.option("recursiveFileLookup", "true").parquet(

@@ -1871,9 +1871,6 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. The corpus is never re-decoded — the whole point of the
     persisted index.
     """
-    from clj_kinesis_to_firehose_spark.operators.curation_r10 import (
-        _write_doc_slices,
-    )
     from clj_kinesis_to_firehose_spark.operators.curation_r11 import (
         _phash_batches,
     )
@@ -1881,8 +1878,13 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_media_batches,
     )
     from clj_kinesis_to_firehose_spark.sources import prior_epoch_paths
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        DOCS_RAW_SCHEMA,
+        read_replay,
+        write_doc_replay,
+    )
 
-    replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
+    replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     index_dir = scratch_dir("kf_phash_idx_")
     out_dir = scratch_dir("kf_phash_ingest_out_")
     spark.createDataFrame(
@@ -1953,15 +1955,8 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(f"{index_dir}/epoch_{epoch}")
 
-    from clj_kinesis_to_firehose_spark.operators.curation_r10 import (
-        DOCS_RAW_SCHEMA,
-    )
-
     run_bounded(
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
         .writeStream.foreachBatch(ingest_batch)
     )
     return spark.read.option("recursiveFileLookup", "true").parquet(

@@ -1715,13 +1715,14 @@ def stream_pref_pair_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials per cohort. Epoch-keyed OVERWRITE keeps at-least-once
     re-execution idempotent.
     """
-    from clj_kinesis_to_firehose_spark.operators.curation_r10 import (
-        DOCS_RAW_SCHEMA,
-        _write_doc_slices,
-    )
     from clj_kinesis_to_firehose_spark.sources import scratch_dir
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        DOCS_RAW_SCHEMA,
+        read_replay,
+        write_doc_replay,
+    )
 
-    replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
+    replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     out_dir = scratch_dir("kf_pref_ingest_")
 
     def extremes_batch(batch_df: DataFrame, epoch: int) -> None:
@@ -1729,10 +1730,7 @@ def stream_pref_pair_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
     run_bounded(
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
         .writeStream.foreachBatch(extremes_batch)
     )
 

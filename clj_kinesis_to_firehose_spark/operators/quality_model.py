@@ -328,13 +328,15 @@ def stream_quality_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store); the model rides in the plan, not in a shuffle.
     Per-batch driver traffic is zero — decisions append straight to
     the output table."""
-    from clj_kinesis_to_firehose_spark.operators.curation_r10 import (
-        _write_doc_slices,
-    )
     from clj_kinesis_to_firehose_spark.sources import scratch_dir
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        DOCS_RAW_SCHEMA,
+        read_replay,
+        write_doc_replay,
+    )
 
     w = _ql_fit_weights(spark, sf_dir)
-    replay_dir = _write_doc_slices(spark, sf_dir, n_slices=4)
+    replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     out_dir = scratch_dir("kf_qladm_out_")
 
     def score_batch(batch_df: DataFrame, epoch: int) -> None:
@@ -351,15 +353,8 @@ def stream_quality_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rewrites the same path with the same rows — idempotent
         out.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    from clj_kinesis_to_firehose_spark.operators.curation_r10 import (
-        DOCS_RAW_SCHEMA,
-    )
-
     run_bounded(
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
         .writeStream.foreachBatch(score_batch)
     )
     return (

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.registry import register
 from clj_kinesis_to_firehose_spark.sources import load_table
+from clj_kinesis_to_firehose_spark.sources.streams import read_replay, write_replay
 from clj_kinesis_to_firehose_spark.storage import SnapshotTable
 from clj_kinesis_to_firehose_spark.storage.snapshots import fresh_table_dir
 from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
@@ -226,15 +227,12 @@ def snapshot_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer). The three batches touch disjoint key sets, so the final
     state — which the oracle recomputes relationally — is independent
     of micro-batch arrival order."""
-    import os
-
     t = SnapshotTable(
         spark, fresh_table_dir(sf_dir, "stream_upsert", spark), key="o_orderkey"
     )
     base = _base_orders(spark, sf_dir)
     t.create(base, n_files=8)
 
-    batch_dir = fresh_table_dir(sf_dir, "stream_upsert_batches", spark)
     batches = [
         base.filter(F.col("o_orderkey") % 10 == 0).select(
             "o_orderkey", (F.col("o_totalprice") + 100.0).alias("o_totalprice")
@@ -247,17 +245,12 @@ def snapshot_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", (F.col("o_totalprice") + 200.0).alias("o_totalprice")
         ),
     ]
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(batch_dir, f"slice={i}")
-        )
-    stream = (
-        spark.readStream.schema("o_orderkey long, o_totalprice double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(batch_dir, "slice=*"))
+    batch_dir = write_replay(
+        fresh_table_dir(sf_dir, "stream_upsert_batches", spark), batches
     )
     run_bounded(
-        stream.writeStream.foreachBatch(
+        read_replay(spark, batch_dir, "o_orderkey long, o_totalprice double")
+        .writeStream.foreachBatch(
             lambda bdf, _bid: None if bdf.isEmpty() else t.merge_upsert(bdf)
         )
     )
@@ -615,10 +608,6 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     source's final state relationally. At 100 TB each sync step moves
     only the churn, and the stream checkpoint carries the consumer's
     position across restarts."""
-    import os
-
-    from clj_kinesis_to_firehose_spark.sources.streams import _stamp_slice_order
-
     src = SnapshotTable(
         spark, fresh_table_dir(sf_dir, "cdf_stream_src", spark), key="o_orderkey"
     )
@@ -627,20 +616,17 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src.merge_upsert(_updates(base))  # v2
     src.delete_where("o_totalprice < 50000.0")  # v3
 
-    feed_dir = fresh_table_dir(sf_dir, "cdf_stream_feed", spark)
-    for v in range(1, src.latest_version()):
-        (
-            src.changes(v, v + 1)
-            .select(
+    feed_dir = write_replay(
+        fresh_table_dir(sf_dir, "cdf_stream_feed", spark),
+        [
+            src.changes(v, v + 1).select(
                 "o_orderkey",
                 "o_totalprice",
                 (F.col("change_type") == "delete").alias("_del"),
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(feed_dir, f"slice={v - 1}"))
-        )
-    _stamp_slice_order(feed_dir)
+            for v in range(1, src.latest_version())
+        ],
+    )
 
     replica = SnapshotTable(
         spark,
@@ -648,13 +634,8 @@ def snapshot_changes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         key="o_orderkey",
     )
     replica.create(src.read(version=1), n_files=8)
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, o_totalprice double, _del boolean"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed_dir)
+    stream = read_replay(
+        spark, feed_dir, "o_orderkey long, o_totalprice double, _del boolean"
     )
 
     def apply(bdf: DataFrame, _bid: int) -> None:

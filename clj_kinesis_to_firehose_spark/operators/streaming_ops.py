@@ -31,6 +31,8 @@ from clj_kinesis_to_firehose_spark.registry import register
 from clj_kinesis_to_firehose_spark.sources import load_table, scratch_dir
 from clj_kinesis_to_firehose_spark.sources.streams import (
     read_event_stream,
+    read_replay,
+    write_replay,
     write_replay_slices,
 )
 from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
@@ -1038,10 +1040,9 @@ def stream_kpl_firehose_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         kpl_aggregate,
         kpl_deaggregate,
     )
-    from clj_kinesis_to_firehose_spark.sources.streams import _stamp_slice_order
 
     raw = load_table(spark, sf_dir, "events")
-    sliced = raw.select(
+    records = raw.select(
         (F.ntile(4).over(Window.orderBy("ts", "event_id")) - 1).alias("__slice"),
         (F.col("event_id") % 16).alias("__batch"),
         F.col("user_id").cast("string").alias("pk"),
@@ -1055,26 +1056,17 @@ def stream_kpl_firehose_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         blob = kpl_aggregate(
             [(pk, p.encode()) for pk, p in zip(pdf["pk"], pdf["payload"])]
         )
-        return pd.DataFrame({"slice": [int(pdf["__slice"].iloc[0])], "blob": [blob]})
+        return pd.DataFrame({"__slice": [int(pdf["__slice"].iloc[0])], "blob": [blob]})
 
-    # persist: the per-slice writes below would otherwise re-execute
-    # the global ntile sort AND the Python KPL packing once per slice
-    blobs = sliced.groupBy("__slice", "__batch").applyInPandas(
-        encode, "slice int, blob binary"
-    ).persist()
-    replay_dir = scratch_dir("kf_kpl_replay_")
-    try:
-        for i in range(4):
-            (
-                blobs.filter(F.col("slice") == i)
-                .select("blob")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(replay_dir, f"slice={i}"))
-            )
-    finally:
-        blobs.unpersist()
-    _stamp_slice_order(replay_dir)
+    # write_replay caches the blobs while it cuts the slices, so the
+    # global ntile sort and the Python KPL packing run once
+    replay_dir = write_replay(
+        scratch_dir("kf_kpl_replay_"),
+        sliced=records.groupBy("__slice", "__batch").applyInPandas(
+            encode, "__slice int, blob binary"
+        ),
+        n_slices=4,
+    )
 
     def decode(batches):
         for pdf in batches:
@@ -1086,14 +1078,9 @@ def stream_kpl_firehose_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["pk", "payload"])
 
-    stream = (
-        spark.readStream.schema("blob binary")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(replay_dir)
-    )
     parsed = (
-        stream.mapInPandas(decode, "pk string, payload string")
+        read_replay(spark, replay_dir, "blob binary")
+        .mapInPandas(decode, "pk string, payload string")
         .select(
             F.from_json(
                 "payload",
@@ -1163,7 +1150,7 @@ def stream_reshard_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from clj_kinesis_to_firehose_spark.sources.streams import (
         _SHARD_BUCKET,
-        read_reshard_stream,
+        RESHARD_RAW_SCHEMA,
         write_reshard_replay,
     )
 
@@ -1175,7 +1162,9 @@ def stream_reshard_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(cap_dir)
 
-    run_bounded(read_reshard_stream(spark, replay).writeStream.foreachBatch(capture))
+    run_bounded(
+        read_replay(spark, replay, RESHARD_RAW_SCHEMA).writeStream.foreachBatch(capture)
+    )
 
     arr = spark.read.parquet(cap_dir)
     w = Window.partitionBy("user_id").orderBy("batch_id", "seq")

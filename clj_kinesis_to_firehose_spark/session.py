@@ -3,8 +3,8 @@
 Scale notes (100 TB design): these configs are the local-mode
 projection of a cluster profile — AQE on (runtime partition
 coalescing + skew-join splitting), Arrow on (vectorized
-pandas-UDF interchange), explicit shuffle partitions sized to the
-local core count. On a real cluster the same builder is used with
+pandas-UDF interchange), a fixed 32 shuffle partitions that AQE
+coalesces further. On a real cluster the same builder is used with
 ``master`` unset (cluster manager decides) and shuffle partitions
 left to AQE's ``spark.sql.adaptive.coalescePartitions``.
 """
@@ -15,7 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Session confs every query in this engine assumes. ``ensure_configs``
+#: Session confs every query in this engine assumes. ``build_spark``
+#: sets them on the engine's own sessions; ``ensure_configs``
 #: re-applies the runtime-settable ones to foreign sessions (the
 #: driver's harness builds its own SparkSession).
 RUNTIME_CONFS = {
@@ -28,9 +29,9 @@ RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     # Arrow for all pandas-UDF / toPandas interchange.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Right-size shuffles when running inside a foreign session (the
-    # driver harness's default of 200 makes local streaming state and
-    # small aggregations latency-bound); AQE coalesces further.
+    # Right-size shuffles, in the engine's sessions and in foreign
+    # ones alike (Spark's default of 200 makes local streaming state
+    # and small aggregations latency-bound); AQE coalesces further.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
 }
@@ -97,8 +98,6 @@ def build_spark(app_name: str = "kf-spark", cpus: int | None = None) -> SparkSes
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

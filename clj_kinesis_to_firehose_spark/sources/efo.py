@@ -2,7 +2,7 @@
 
 The repo's Kinesis consumer surface so far models the SHARED-throughput
 pull path: GetRecords paging (sources/pyds.py), its fault gauntlet
-(sources/faults.py), and KCL-style lease contention (sources/kcl.py).
+(sources/faults.py), and KCL-style lease contention (sources/kcl_lease.py).
 The one real consumer mode still missing is ENHANCED FAN-OUT
 [PK: Kinesis SubscribeToShard API docs]:
 

@@ -1,8 +1,9 @@
 """Consumer-side fault double for the Kinesis source seam.
 
 The ``kinesis_replay`` DataSource (sources/pyds.py) reads each
-shard-slice with :func:`pyds._read_rows` — the seam a live GetRecords
-loop replaces. The happy-path replay never exercises what a real
+shard-slice through :func:`pyds._read_slice_rows`, whose happy path is
+:func:`pyds._read_batches` — the seam a live GetRecords loop replaces.
+The happy-path replay never exercises what a real
 consumer spends most of its defensive code on [PK: Kinesis API docs]:
 
 * ``ProvisionedThroughputExceededException`` — the shard's 5 reads/s /

@@ -15,10 +15,12 @@ with BOTH faces a real connector needs:
   fans the uncommitted range out per slice file, and ``commit`` is the
   checkpoint ack.
 
-Swapping in a live network consumer changes ``_read_rows`` (and
-``latestOffset``'s head probe) only — partitions stay shards, offsets
-stay sequence checkpoints, and everything downstream (watermarks,
-stateful ops, the Firehose sink) is untouched. This makes the round-4
+Swapping in a live network consumer changes only the happy path's
+``_read_batches`` (both readers reach it through the
+``_read_slice_rows`` dispatch) and ``latestOffset``'s head probe —
+partitions stay shards, offsets stay sequence checkpoints, and
+everything downstream (watermarks, stateful ops, the Firehose sink)
+is untouched. This makes the round-4
 verdict's "real Kinesis connector execution — config seam only"
 concrete: the seam now has a working, tested implementation shape.
 """

@@ -239,6 +239,48 @@ def test_poison_record_does_not_wedge_stream(spark):
     assert ids == {i for i in range(19)} | {99}
 
 
+def test_replay_is_read_one_slice_per_micro_batch_in_index_order(spark):
+    """A ``write_replay`` directory streams back one slice per
+    micro-batch, in slice-index order: four slices cut from one frame,
+    then seven whole frames — eleven, so ``slice=10`` sorts before
+    ``slice=2`` by name. The order comes from the stamped mtimes, not
+    from when each slice was written."""
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        read_replay,
+        write_replay,
+    )
+
+    started = time.time()
+    replay = write_replay(
+        tempfile.mkdtemp(prefix="kf_order_"),
+        [spark.range(3).select(F.lit(i).alias("tag"), "id") for i in range(4, 11)],
+        sliced=spark.range(8).selectExpr(
+            "CAST(id DIV 2 AS INT) AS tag", "id", "id DIV 2 AS __slice"
+        ),
+        n_slices=4,
+    )
+    mtimes = []
+    for i in range(11):
+        d = os.path.join(replay, f"slice={i}")
+        mtimes.append({os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)})
+    assert all(len(m) == 1 for m in mtimes), "one stamp per slice"
+    mtimes = [m.pop() for m in mtimes]
+    assert mtimes == sorted(set(mtimes)) and mtimes[-1] < started
+
+    seen = []
+    q = (
+        read_replay(spark, replay, "tag int, id long")
+        .writeStream.foreachBatch(
+            lambda bdf, _: seen.append(sorted({r.tag for r in bdf.collect()}))
+        )
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="kf_chk_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert seen == [[i] for i in range(11)]
+
+
 def test_checkpoint_survives_reshard(spark):
     """Checkpoint continuity through a shard split+merge: the consumer
     drains the pre-merge shards, STOPS, the merged child's slices land,
@@ -248,7 +290,8 @@ def test_checkpoint_survives_reshard(spark):
     import shutil
 
     from clj_kinesis_to_firehose_spark.sources.streams import (
-        read_reshard_stream,
+        RESHARD_RAW_SCHEMA,
+        read_replay,
         write_reshard_replay,
     )
 
@@ -266,7 +309,7 @@ def test_checkpoint_survives_reshard(spark):
             ).parquet(cap)
 
         q = (
-            read_reshard_stream(spark, replay)
+            read_replay(spark, replay, RESHARD_RAW_SCHEMA)
             .writeStream.foreachBatch(capture)
             .option("checkpointLocation", chk)
             .trigger(availableNow=True)
@@ -369,7 +412,8 @@ def test_stateful_aggregation_state_survives_reshard(spark):
     import uuid
 
     from clj_kinesis_to_firehose_spark.sources.streams import (
-        read_reshard_stream,
+        RESHARD_RAW_SCHEMA,
+        read_replay,
         write_reshard_replay,
     )
 
@@ -382,7 +426,7 @@ def test_stateful_aggregation_state_survives_reshard(spark):
     def run():
         name = f"reshard_counts_{uuid.uuid4().hex[:8]}"
         q = (
-            read_reshard_stream(spark, replay)
+            read_replay(spark, replay, RESHARD_RAW_SCHEMA)
             .groupBy("user_id")
             .count()
             .writeStream.format("memory")
@@ -1003,9 +1047,12 @@ def test_transform_sink_dead_letters_original_payloads(spark, monkeypatch):
 
 def test_bounded_runs_and_scratch_dirs_are_defined_once():
     """Source lint over the package: only ``pipelines.run_bounded``
-    sets a checkpoint location or the availableNow trigger, and only
+    sets a checkpoint location or the availableNow trigger, only
     ``loader.scratch_dir`` calls ``tempfile.mkdtemp`` — so every bounded
-    stream gets a fresh checkpoint that is reclaimed at exit."""
+    stream gets a fresh checkpoint that is reclaimed at exit — and the
+    slice-per-micro-batch replay format is defined once: only
+    ``streams.read_replay`` sets ``maxFilesPerTrigger`` and only
+    ``streams.write_replay`` stamps file mtimes (``os.utime``)."""
     import ast
     import pathlib
 
@@ -1024,6 +1071,12 @@ def test_bounded_runs_and_scratch_dirs_are_defined_once():
             return "run_bounded"
         if name == "mkdtemp":
             return "scratch_dir"
+        if name in ("option", "options") and (
+            first == "maxFilesPerTrigger" or "maxFilesPerTrigger" in keywords
+        ):
+            return "read_replay"
+        if name == "utime":
+            return "write_replay"
         return None
 
     root = pathlib.Path(pkg.__file__).parent
