@@ -40,7 +40,11 @@ from clj_kinesis_to_firehose_spark.sources.streams import (
     read_replay,
     write_doc_replay,
 )
-from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
+from clj_kinesis_to_firehose_spark.streaming.pipelines import (
+    read_epochs,
+    run_epochs,
+    write_epoch,
+)
 
 # --- dedup_substring_spans -------------------------------------------------
 
@@ -1610,9 +1614,7 @@ def stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     rem_counts = spark.read.parquet(rem_dir)
     probe = spark.read.parquet(probe_dir)
 
-    out_dir = scratch_dir("kf_admission_out_")
-
-    def admit_batch(batch_df: DataFrame, epoch: int) -> None:
+    def admit_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
         g = _gopher_columns(batch_df).select(
             "doc_id",
             F.col("keep").alias("quality_keep"),
@@ -1638,45 +1640,25 @@ def stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_tokens_removed"),
         )
-        out = (
-            g.join(d, "doc_id")
-            .join(r, "doc_id")
-            .select(
-                "doc_id",
-                "quality_keep",
-                "decon_keep",
-                (F.col("n_tokens_removed") == 0).cast("int").alias("span_clean"),
-                (
-                    (F.col("quality_keep") == 1)
-                    & (F.col("decon_keep") == 1)
-                    & (F.col("n_tokens_removed") == 0)
-                )
-                .cast("int")
-                .alias("admitted"),
-                "n_quality_rules",
-                "contamination_frac",
-                "n_tokens_removed",
+        return g.join(d, "doc_id").join(r, "doc_id").select(
+            "doc_id",
+            "quality_keep",
+            "decon_keep",
+            (F.col("n_tokens_removed") == 0).cast("int").alias("span_clean"),
+            (
+                (F.col("quality_keep") == 1)
+                & (F.col("decon_keep") == 1)
+                & (F.col("n_tokens_removed") == 0)
             )
+            .cast("int")
+            .alias("admitted"),
+            "n_quality_rules",
+            "contamination_frac",
+            "n_tokens_removed",
         )
-        # epoch-keyed OVERWRITE: at-least-once epoch re-execution
-        # rewrites the same path with the same rows — idempotent
-        out.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(admit_batch)
-    )
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
-    ).select(
-        "doc_id",
-        "quality_keep",
-        "decon_keep",
-        "span_clean",
-        "admitted",
-        "n_quality_rules",
-        "contamination_frac",
-        "n_tokens_removed",
+    return run_epochs(
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA), admit_batch
     )
 
 
@@ -1855,36 +1837,19 @@ def stream_span_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     State lives in a parquet-backed index TABLE, not executor memory:
     each batch does one distributed join against the index and one
-    anti-join append of its new hashes — zero driver-side data
-    traffic, and the index survives restarts AND
-    re-executions: writes are epoch-keyed overwrites and the dup-count
-    join reads strictly-prior epochs, so an at-least-once replay of any
-    micro-batch produces byte-identical output (in production the index
-    is the snapshot-layer table with its bucketing on h). Batch boundaries
-    ARE semantics here (dup-vs-prior depends on arrival order), so the
-    oracle derives the same doc_id-ordered batch assignment with
-    NTILE — exact, because slice order is stamped deterministically.
+    anti-join write of its new hashes as its own index epoch — zero
+    driver-side data traffic, and the index survives restarts AND
+    re-executions, as the dup-count join reads only the epochs before
+    the batch's own (in production the index is the snapshot-layer
+    table with its bucketing on h). Batch boundaries ARE semantics
+    here (dup-vs-prior depends on arrival order), so the oracle
+    derives the same doc_id-ordered batch assignment with NTILE —
+    exact, because slice order is stamped deterministically.
     """
     replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     index_dir = scratch_dir("kf_span_idx_")
-    out_dir = scratch_dir("kf_span_ingest_out_")
-    # initialize an EMPTY index (epoch column = which batch added the
-    # hash) so batch 1's join sees a valid table
-    spark.createDataFrame([], "h long, epoch long").write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/epoch_init")
 
-    def _read_prior(epoch: int) -> DataFrame:
-        # strictly-prior epoch dirs via the ONE shared enumeration
-        # rule (sources.prior_epoch_paths) — replay-safe index reads
-        # have a single definition across every index-ingest op
-        from clj_kinesis_to_firehose_spark.sources import (
-            prior_epoch_paths,
-        )
-
-        return spark.read.parquet(*prior_epoch_paths(index_dir, epoch))
-
-    def ingest_batch(batch_df: DataFrame, epoch: int) -> None:
+    def ingest_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
         batch_id = epoch + 1  # one slice per trigger, mtime-ordered
         aug = batch_df.select(
             "doc_id",
@@ -1901,16 +1866,13 @@ def stream_span_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.split("text", " ")).alias("n"),
         )
         anch = _anchored_spans(toks)
-        # STRICTLY-PRIOR epochs only, via explicit path enumeration
-        # (see _read_prior): a replayed batch sees the same index
-        # state as its first attempt — dup counts are identical on
-        # any at-least-once recovery (idempotent)
-        idx = (
-            _read_prior(epoch)
-            .select("h")
-            .distinct()
-            .withColumn("in_idx", F.lit(1))
+        prior = read_epochs(spark, index_dir, "h long", before=epoch)
+        write_epoch(
+            index_dir,
+            epoch,
+            anch.select("h").distinct().join(prior, "h", "left_anti"),
         )
+        idx = prior.distinct().withColumn("in_idx", F.lit(1))
         hit = F.when(F.col("in_idx").isNotNull(), 1).otherwise(0)
         per_doc = (
             anch.join(idx, "h", "left")
@@ -1920,7 +1882,7 @@ def stream_span_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(hit).cast("long").alias("n_dup_vs_prior"),
             )
         )
-        out = toks.select("doc_id").join(per_doc, "doc_id", "left").select(
+        return toks.select("doc_id").join(per_doc, "doc_id", "left").select(
             "doc_id",
             F.lit(batch_id).cast("long").alias("batch_id"),
             F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
@@ -1931,30 +1893,9 @@ def stream_span_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("int")
             .alias("novel"),
         )
-        # epoch-keyed OVERWRITE writes: re-execution rewrites the same
-        # paths with the same content — no duplicated rows, no index
-        # corruption (the non-idempotent append was the r10 review's
-        # restart-correctness finding)
-        out.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
-        new_h = (
-            anch.select("h")
-            .distinct()
-            .join(_read_prior(epoch).select("h"), "h", "left_anti")
-            .withColumn("epoch", F.lit(epoch).cast("long"))
-        )
-        # safe under replay: new_h's plan lists only strictly-prior
-        # epoch dirs, never the epoch_{epoch} target this overwrite
-        # deletes
-        new_h.write.mode("overwrite").parquet(f"{index_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(ingest_batch)
-    )
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
-    ).select(
-        "doc_id", "batch_id", "n_spans", "n_dup_vs_prior", "novel"
+    return run_epochs(
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA), ingest_batch
     )
 
 

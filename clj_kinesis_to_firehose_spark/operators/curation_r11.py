@@ -34,7 +34,7 @@ from clj_kinesis_to_firehose_spark.operators.llm_similarity import (
 )
 from clj_kinesis_to_firehose_spark.registry import register
 from clj_kinesis_to_firehose_spark.sources import fan_out, load_table
-from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_epochs
 
 # --- vocabulary family -------------------------------------------------------
 
@@ -913,11 +913,8 @@ def stream_vocab_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per batch, one tokenize scan of the batch and a term-keyed
     agg — partials are vocabulary-sized, not corpus-sized; the merge
-    is a second term-keyed agg over K-independent partials. Epoch-
-    keyed OVERWRITE writes keep at-least-once re-execution idempotent
-    (same rows to the same path), per the streaming-ops house rule.
+    is a second term-keyed agg over K-independent partials.
     """
-    from clj_kinesis_to_firehose_spark.sources import scratch_dir
     from clj_kinesis_to_firehose_spark.sources.streams import (
         DOCS_RAW_SCHEMA,
         read_replay,
@@ -925,10 +922,9 @@ def stream_vocab_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
-    out_dir = scratch_dir("kf_vocab_ingest_")
 
-    def count_batch(batch_df: DataFrame, epoch: int) -> None:
-        stats = (
+    def count_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
+        return (
             batch_df.select(
                 "doc_id", F.explode(F.split("text", " ")).alias("term")
             )
@@ -938,15 +934,9 @@ def stream_vocab_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("doc_id").alias("df"),
             )
         )
-        stats.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(count_batch)
-    )
     merged = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
+        run_epochs(read_replay(spark, replay_dir, DOCS_RAW_SCHEMA), count_batch)
         .groupBy("term")
         .agg(F.sum("tf").alias("tf"), F.sum("df").alias("df"))
     )
@@ -1636,9 +1626,7 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the reference vocab is a K-row parquet table joined
     broadcast-side per batch; each batch does one tokenize scan of
-    itself and a 1-row aggregate — per-batch driver traffic is zero
-    (epoch-keyed OVERWRITE parquet, idempotent under at-least-once
-    re-execution).
+    itself and a 1-row aggregate — per-batch driver traffic is zero.
     """
     from clj_kinesis_to_firehose_spark.sources import scratch_dir
     from clj_kinesis_to_firehose_spark.sources.streams import (
@@ -1656,14 +1644,13 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab = spark.read.parquet(vocab_dir).withColumn("in_v", F.lit(1))
     replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
-    out_dir = scratch_dir("kf_oovmon_out_")
 
-    def monitor_batch(batch_df: DataFrame, epoch: int) -> None:
+    def monitor_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
         toks = batch_df.select(
             "doc_id", F.explode(F.split("text", " ")).alias("term")
         )
         oov = F.when(F.col("in_v").isNull(), 1).otherwise(0)
-        row = (
+        return (
             toks.join(vocab, "term", "left")
             .agg(
                 F.countDistinct("doc_id").alias("n_docs"),
@@ -1681,15 +1668,10 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "oov_rate",
             )
         )
-        row.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(monitor_batch)
+    return run_epochs(
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA), monitor_batch
     )
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
-    ).select("batch_id", "n_docs", "n_tokens", "n_oov", "oov_rate")
 
 
 # --- text_ngram_novelty ------------------------------------------------------

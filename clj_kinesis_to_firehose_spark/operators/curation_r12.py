@@ -50,7 +50,12 @@ from clj_kinesis_to_firehose_spark.operators.llm_dedup import (
 )
 from clj_kinesis_to_firehose_spark.registry import oracle, register, register_memo
 from clj_kinesis_to_firehose_spark.sources import fan_out, load_table, scratch_dir
-from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
+from clj_kinesis_to_firehose_spark.streaming.pipelines import (
+    read_epochs,
+    run_bounded,
+    run_epochs,
+    write_epoch,
+)
 
 # --- multimodal_phash_hamming_pairs ------------------------------------------
 
@@ -1857,9 +1862,8 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a stream of them.
 
     State is a parquet-backed index table, never executor memory:
-    epoch-keyed OVERWRITE writes and strictly-prior-epoch reads (the
-    shared ``sources.prior_epoch_paths`` rule) make any at-least-once
-    micro-batch replay byte-identical. Batch boundaries ARE semantics
+    each batch writes its hashes as its own index epoch and reads only
+    the epochs before its own. Batch boundaries ARE semantics
     (dup-vs-prior depends on arrival order), so the oracle derives the
     same doc_id-ordered batch assignment with NTILE and counts prior
     near-dups with the brute-force hamming spec the banded plan is
@@ -1867,7 +1871,7 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per batch, one Arrow map chain (encode + hash) over ONLY
     the batch's images, one banded join against the index (hash-keyed;
-    bucketed table in production), one epoch append of O(batch) index
+    bucketed table in production), one epoch write of O(batch) index
     rows. The corpus is never re-decoded — the whole point of the
     persisted index.
     """
@@ -1877,7 +1881,6 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clj_kinesis_to_firehose_spark.operators.multimodal import (
         encode_media_batches,
     )
-    from clj_kinesis_to_firehose_spark.sources import prior_epoch_paths
     from clj_kinesis_to_firehose_spark.sources.streams import (
         DOCS_RAW_SCHEMA,
         read_replay,
@@ -1886,12 +1889,8 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
     index_dir = scratch_dir("kf_phash_idx_")
-    out_dir = scratch_dir("kf_phash_ingest_out_")
-    spark.createDataFrame(
-        [], "doc_id long, phash long, epoch long"
-    ).write.mode("overwrite").parquet(f"{index_dir}/epoch_init")
 
-    def ingest_batch(batch_df: DataFrame, epoch: int) -> None:
+    def ingest_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
         batch_id = epoch + 1  # one slice per trigger, mtime-ordered
         from clj_kinesis_to_firehose_spark.operators.multimodal import (
             compose_batches,
@@ -1904,9 +1903,10 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "phash long, n_bits_set long"
             ),
         ).select("doc_id", "phash")
-        idx = spark.read.parquet(
-            *prior_epoch_paths(index_dir, epoch)
+        idx = read_epochs(
+            spark, index_dir, "doc_id long, phash long", before=epoch
         ).select(F.col("doc_id").alias("o_doc"), F.col("phash").alias("h_o"))
+        write_epoch(index_dir, epoch, ph)
         b_bands = _phash_banded(ph).select(
             F.col("doc_id").alias("b_doc"), "band", "bucket"
         )
@@ -1934,7 +1934,7 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts = verified.groupBy("b_doc").agg(
             F.count("*").alias("n_dup_vs_prior")
         )
-        out = (
+        return (
             ph.select("doc_id")
             .join(counts.withColumnRenamed("b_doc", "doc_id"), "doc_id", "left")
             .select(
@@ -1948,20 +1948,10 @@ def stream_phash_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("novel"),
             )
         )
-        # epoch-keyed OVERWRITE: a replayed batch rewrites the same
-        # paths with the same content (reads are strictly-prior)
-        out.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
-        ph.withColumn("epoch", F.lit(epoch).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(ingest_batch)
+    return run_epochs(
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA), ingest_batch
     )
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
-    ).select("doc_id", "batch_id", "n_dup_vs_prior", "novel")
 
 
 # --- multimodal_video_framehash -------------------------------------------------

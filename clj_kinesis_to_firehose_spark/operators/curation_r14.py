@@ -47,7 +47,7 @@ from clj_kinesis_to_firehose_spark.operators.posttrain import (
 )
 from clj_kinesis_to_firehose_spark.registry import oracle, register
 from clj_kinesis_to_firehose_spark.sources import load_table
-from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_epochs
 
 # --- pref_rejection_sampling ---------------------------------------------------
 
@@ -460,9 +460,7 @@ def stream_rejection_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per batch one cohort-keyed rank over batch rows; partials
     are ≤ K rows per cohort per batch; the merge ranks K·batches rows
-    per cohort. Epoch-keyed OVERWRITE keeps at-least-once re-execution
-    idempotent."""
-    from clj_kinesis_to_firehose_spark.sources import scratch_dir
+    per cohort."""
     from clj_kinesis_to_firehose_spark.sources.streams import (
         DOCS_RAW_SCHEMA,
         read_replay,
@@ -470,7 +468,6 @@ def stream_rejection_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
-    out_dir = scratch_dir("kf_bestof_ingest_")
 
     ratio = F.col("n_distinct").cast("double") / F.col("n_tokens")
     wr = Window.partitionBy("lang", "tok_bucket").orderBy(
@@ -478,34 +475,23 @@ def stream_rejection_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wc = Window.partitionBy("lang", "tok_bucket")
 
-    def bestof_batch(batch_df: DataFrame, epoch: int) -> None:
-        partial = (
+    def bestof_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
+        return (
             _score_docs(batch_df)
             .withColumn("r", F.row_number().over(wr))
             .withColumn("batch_n", F.count("*").over(wc).cast("long"))
             .filter(F.col("r") <= BESTOF_KEEP)
             .drop("r")
+            .withColumn("epoch", F.lit(epoch))
         )
-        partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(bestof_batch)
+    partials = run_epochs(
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA), bestof_batch
     )
-
-    partials = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
     # additive counts: one batch_n per (cohort, epoch) — max() collapses
-    # the per-row copies, the sum merges epochs. The epoch is the
-    # NUMERIC directory component only: taking everything after
-    # "epoch_" would include the part-file name, and a cohort split
-    # across two part files in one epoch (maxRecordsPerFile, AQE
-    # rebalance) would then double-count batch_n (review finding)
+    # the per-row copies, the sum merges epochs
     counts = (
-        partials.withColumn(
-            "epoch",
-            F.regexp_extract(F.input_file_name(), r"epoch_(\d+)/", 1),
-        )
-        .groupBy("lang", "tok_bucket", "epoch")
+        partials.groupBy("lang", "tok_bucket", "epoch")
         .agg(F.max("batch_n").alias("bn"))
         .groupBy("lang", "tok_bucket")
         .agg(F.sum("bn").cast("long").alias("n_candidates"))

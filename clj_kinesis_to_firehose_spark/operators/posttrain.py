@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from clj_kinesis_to_firehose_spark.registry import oracle, register, register_memo
 from clj_kinesis_to_firehose_spark.sources import load_table
-from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_epochs
 
 # --- pref_pair_assembly -------------------------------------------------------
 
@@ -1252,34 +1252,25 @@ def stream_chat_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per batch one conversation-keyed agg over batch rows;
     partials are conversation-sized; the merge flattens K
     batch-partials per conversation (K = slice count, bounded).
-    Epoch-keyed OVERWRITE keeps at-least-once re-execution idempotent.
     """
-    from clj_kinesis_to_firehose_spark.sources import scratch_dir
     from clj_kinesis_to_firehose_spark.sources.streams import (
         read_event_stream,
         write_replay_slices,
     )
 
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
-    out_dir = scratch_dir("kf_chat_ingest_")
 
-    def assemble_batch(batch_df: DataFrame, epoch: int) -> None:
-        turns = _chat_turns(batch_df)
-        partial = turns.groupBy("user_id", "month").agg(
+    def assemble_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
+        return _chat_turns(batch_df).groupBy("user_id", "month").agg(
             F.count("*").alias("n_turns"),
             F.sum((F.col("role") == "assistant").cast("int"))
             .cast("long")
             .alias("n_assistant_turns"),
             F.collect_list(F.struct("ts", "event_id", "line")).alias("turns"),
         )
-        partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_event_stream(spark, replay).writeStream.foreachBatch(assemble_batch)
-    )
     merged = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
+        run_epochs(read_event_stream(spark, replay), assemble_batch)
         .groupBy("user_id", "month")
         .agg(
             F.sum("n_turns").cast("long").alias("n_turns"),
@@ -1712,10 +1703,8 @@ def stream_pref_pair_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per batch one cohort-keyed aggregate over batch rows;
     partials are cohort-sized; the merge aggregates K bounded
-    partials per cohort. Epoch-keyed OVERWRITE keeps at-least-once
-    re-execution idempotent.
+    partials per cohort.
     """
-    from clj_kinesis_to_firehose_spark.sources import scratch_dir
     from clj_kinesis_to_firehose_spark.sources.streams import (
         DOCS_RAW_SCHEMA,
         read_replay,
@@ -1723,19 +1712,9 @@ def stream_pref_pair_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
-    out_dir = scratch_dir("kf_pref_ingest_")
-
-    def extremes_batch(batch_df: DataFrame, epoch: int) -> None:
-        partial = _cohort_extremes(_score_docs(batch_df))
-        partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
-
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(extremes_batch)
-    )
-
-    partials = spark.read.option("recursiveFileLookup", "true").parquet(
-        out_dir
+    partials = run_epochs(
+        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA),
+        lambda batch_df, epoch: _cohort_extremes(_score_docs(batch_df)),
     )
     # merge: flatten both partial sides back to candidate ROWS and
     # re-run the ONE _cohort_extremes definition over them — the ratio
@@ -1819,30 +1798,21 @@ def stream_freshness_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap per-batch state instead of scanning the stream's history.
 
     Scale: per batch one event-type-cardinality aggregate over batch
-    rows; the merge folds K bounded partials. Epoch-keyed OVERWRITE
-    keeps at-least-once re-execution idempotent.
+    rows; the merge folds K bounded partials.
     """
-    from clj_kinesis_to_firehose_spark.sources import scratch_dir
     from clj_kinesis_to_firehose_spark.sources.streams import (
         read_event_stream,
         write_replay_slices,
     )
 
     replay = write_replay_slices(spark, sf_dir, n_slices=4)
-    out_dir = scratch_dir("kf_fresh_ingest_")
-
-    def freshness_batch(batch_df: DataFrame, epoch: int) -> None:
-        partial = batch_df.groupBy("event_type").agg(
-            F.max("ts").alias("latest_ts"), F.count("*").alias("n_events")
-        )
-        partial.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
-
-    run_bounded(
-        read_event_stream(spark, replay).writeStream.foreachBatch(freshness_batch)
-    )
     per_type = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
+        run_epochs(
+            read_event_stream(spark, replay),
+            lambda batch_df, epoch: batch_df.groupBy("event_type").agg(
+                F.max("ts").alias("latest_ts"), F.count("*").alias("n_events")
+            ),
+        )
         .groupBy("event_type")
         .agg(
             F.max("latest_ts").alias("latest_ts"),

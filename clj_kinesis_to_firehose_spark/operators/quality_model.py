@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from clj_kinesis_to_firehose_spark.operators.llm_text import STOPWORDS
 from clj_kinesis_to_firehose_spark.registry import register, register_memo
 from clj_kinesis_to_firehose_spark.sources import load_table
-from clj_kinesis_to_firehose_spark.streaming.pipelines import run_bounded
+from clj_kinesis_to_firehose_spark.streaming.pipelines import run_epochs
 
 #: online-perceptron epochs over the sample (one update pass per
 #: epoch, doc_id order). 16 is past the knee on the fixture: train
@@ -326,9 +326,8 @@ def stream_quality_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per batch one stateless projection (no corpus join, no
     state store); the model rides in the plan, not in a shuffle.
-    Per-batch driver traffic is zero — decisions append straight to
-    the output table."""
-    from clj_kinesis_to_firehose_spark.sources import scratch_dir
+    Per-batch driver traffic is zero — decisions go straight to the
+    batch's epoch output."""
     from clj_kinesis_to_firehose_spark.sources.streams import (
         DOCS_RAW_SCHEMA,
         read_replay,
@@ -337,29 +336,20 @@ def stream_quality_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = _ql_fit_weights(spark, sf_dir)
     replay_dir = write_doc_replay(spark, sf_dir, n_slices=4)
-    out_dir = scratch_dir("kf_qladm_out_")
 
-    def score_batch(batch_df: DataFrame, epoch: int) -> None:
+    def score_batch(batch_df: DataFrame, epoch: int) -> DataFrame:
         feats = _ql_features(batch_df, passthrough=("source",))
         margin = sum(
             F.lit(int(w[j])) * F.col(f"x{j}") for j in range(_NF)
         )
-        out = feats.select(
+        return feats.select(
             "source",
             margin.cast("long").alias("margin"),
             F.when(margin > 0, F.lit(1)).otherwise(F.lit(0)).alias("adm"),
         )
-        # epoch-keyed OVERWRITE: at-least-once epoch re-execution
-        # rewrites the same path with the same rows — idempotent
-        out.write.mode("overwrite").parquet(f"{out_dir}/epoch_{epoch}")
 
-    run_bounded(
-        read_replay(spark, replay_dir, DOCS_RAW_SCHEMA)
-        .writeStream.foreachBatch(score_batch)
-    )
     return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
+        run_epochs(read_replay(spark, replay_dir, DOCS_RAW_SCHEMA), score_batch)
         .groupBy("source")
         .agg(
             F.sum("adm").cast("long").alias("n_admitted"),

@@ -49,6 +49,7 @@ from clj_kinesis_to_firehose_spark.streaming.firehose_sink import (
 from clj_kinesis_to_firehose_spark.streaming.pipelines import (
     _run_to_memory,
     run_bounded,
+    run_epochs,
 )
 
 
@@ -1129,8 +1130,9 @@ def stream_kpl_firehose_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_reshard_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard split + merge replay (sources.streams.write_reshard_replay):
-    the stream is consumed through a checkpointed foreachBatch capture,
-    then the ARRIVAL LOG — not the source — is audited:
+    the stream's micro-batches are captured, each tagged with its
+    batch id, as the epochs of an ARRIVAL LOG (``run_epochs``), and
+    the log — not the source — is audited:
 
     * ``n_records`` / ``n_keys`` per shard must equal the oracle's
       portable-hash routing of the source table (nothing lost or
@@ -1154,19 +1156,10 @@ def stream_reshard_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_reshard_replay,
     )
 
-    replay = write_reshard_replay(spark, sf_dir)
-    cap_dir = os.path.join(scratch_dir("kf_reshard_cap_"), "arrivals")
-
-    def capture(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(int(epoch_id))).write.mode(
-            "append"
-        ).parquet(cap_dir)
-
-    run_bounded(
-        read_replay(spark, replay, RESHARD_RAW_SCHEMA).writeStream.foreachBatch(capture)
+    arr = run_epochs(
+        read_replay(spark, write_reshard_replay(spark, sf_dir), RESHARD_RAW_SCHEMA),
+        lambda batch_df, epoch: batch_df.withColumn("batch_id", F.lit(epoch)),
     )
-
-    arr = spark.read.parquet(cap_dir)
     w = Window.partitionBy("user_id").orderBy("batch_id", "seq")
     b2 = F.expr(_SHARD_BUCKET).cast("long") % 2
     return (

@@ -3,7 +3,6 @@ from clj_kinesis_to_firehose_spark.sources.loader import (
     fan_out,
     load_table,
     load_tables,
-    prior_epoch_paths,
     scratch_dir,
 )
 
@@ -12,6 +11,5 @@ __all__ = [
     "fan_out",
     "load_table",
     "load_tables",
-    "prior_epoch_paths",
     "scratch_dir",
 ]

@@ -187,31 +187,3 @@ def estimated_bytes(df) -> int:
     except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
         return -1
     return est if est < 2**63 - 1 else -1
-
-
-def prior_epoch_paths(
-    index_dir: str, epoch: int, init_name: str = "epoch_init"
-) -> list[str]:
-    """Explicit strictly-prior epoch_* paths of a parquet-backed
-    incremental index — THE single definition of the replay-safe index
-    read (shared by every foreachBatch index-ingest op): on an
-    at-least-once epoch re-execution a recursive root read would also
-    list THIS epoch's files from the prior attempt, which the
-    epoch-keyed overwrite deletes before the job runs — scan tasks
-    then fail on listed-but-deleted files. Enumerating prior epochs
-    explicitly makes a replayed batch read exactly what its first
-    attempt read (byte-identical replay, idempotent dup counts)."""
-    import os
-
-    paths = []
-    for name in sorted(os.listdir(index_dir)):
-        if name == init_name:
-            paths.append(os.path.join(index_dir, name))
-        elif name.startswith("epoch_"):
-            try:
-                n = int(name[len("epoch_"):])
-            except ValueError:
-                continue
-            if n < epoch:
-                paths.append(os.path.join(index_dir, name))
-    return paths

@@ -1015,6 +1015,61 @@ def test_run_bounded_checkpoints_in_scratch_and_reraises_failures(spark):
     assert len(checkpoints() - before) == 1
 
 
+def test_epoch_output_is_overwritten_and_read_back_by_epoch_number(spark):
+    """The epoch-keyed micro-batch output: writing an epoch again
+    replaces its rows instead of adding to them; ``before=n`` reads
+    exactly the epochs numbered below ``n`` (``epoch_10`` is later
+    than ``epoch_2``, never read before it); ``before=0`` is an empty
+    frame of the given schema with nothing seeded on disk; and
+    ``run_epochs`` returns every micro-batch's partial once."""
+    from clj_kinesis_to_firehose_spark.sources.streams import (
+        read_replay,
+        write_replay,
+    )
+    from clj_kinesis_to_firehose_spark.streaming.pipelines import (
+        read_epochs,
+        run_epochs,
+        write_epoch,
+    )
+
+    schema = "epoch long, id long"
+
+    def rows(epoch):
+        return spark.range(2).selectExpr(f"CAST({epoch} AS LONG) AS epoch", "id")
+
+    def read(root, before=None):
+        df = read_epochs(spark, root, schema, before=before)
+        return sorted(tuple(r) for r in df.collect())
+
+    root = tempfile.mkdtemp(prefix="kf_epochs_")
+    write_epoch(root, 3, rows(3))
+    write_epoch(root, 3, rows(3))
+    assert read(root) == [(3, 0), (3, 1)]
+
+    root = tempfile.mkdtemp(prefix="kf_epochs_")
+    for n in range(12):
+        write_epoch(root, n, rows(n))
+    for n in (1, 2, 3, 10, 11, 12):
+        assert read(root, before=n) == [(e, i) for e in range(n) for i in (0, 1)]
+
+    empty = read_epochs(spark, root, schema, before=0)
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == "struct<epoch:bigint,id:bigint>"
+    assert sorted(os.listdir(root)) == sorted(f"epoch_{n}" for n in range(12))
+
+    replay = write_replay(
+        tempfile.mkdtemp(prefix="kf_epoch_replay_"),
+        [spark.range(3).select(F.lit(i).alias("tag"), "id") for i in range(4)],
+    )
+    out = run_epochs(
+        read_replay(spark, replay, "tag int, id long"),
+        lambda batch_df, epoch: batch_df.withColumn("epoch", F.lit(epoch)),
+    )
+    assert sorted((r.epoch, r.tag, r.id) for r in out.collect()) == [
+        (e, e, i) for e in range(4) for i in range(3)
+    ]
+
+
 def test_transform_sink_dead_letters_original_payloads(spark, monkeypatch):
     """Firehose data transformation: Ok records deliver their
     transformed payload (``value_cents``, no ``value``); ProcessingFailed
@@ -1051,32 +1106,45 @@ def test_bounded_runs_and_scratch_dirs_are_defined_once():
     ``loader.scratch_dir`` calls ``tempfile.mkdtemp`` — so every bounded
     stream gets a fresh checkpoint that is reclaimed at exit — and the
     slice-per-micro-batch replay format is defined once: only
-    ``streams.read_replay`` sets ``maxFilesPerTrigger`` and only
-    ``streams.write_replay`` stamps file mtimes (``os.utime``)."""
+    ``streams.read_replay`` sets ``maxFilesPerTrigger`` or
+    ``recursiveFileLookup`` and only ``streams.write_replay`` stamps
+    file mtimes (``os.utime``). The epoch-keyed micro-batch output is
+    defined once too: only the epoch helpers of ``pipelines`` spell an
+    ``epoch_`` directory name, and no writer appends (a re-executed
+    micro-batch would add its rows a second time)."""
     import ast
     import pathlib
+    import re
 
     import clj_kinesis_to_firehose_spark as pkg
 
-    def owner(call):
-        func = call.func
+    def owners(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if re.search(r"(^|/)epoch_", node.value):
+                return ("_epoch_dir", "read_epochs")
+            return None
+        if not isinstance(node, ast.Call):
+            return None
+        func = node.func
         name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
-        keywords = {k.arg for k in call.keywords}
-        first = call.args[0].value if call.args and isinstance(call.args[0], ast.Constant) else None
+        keywords = {k.arg for k in node.keywords}
+        first = node.args[0].value if node.args and isinstance(node.args[0], ast.Constant) else None
+
+        def option(key):
+            return name in ("option", "options") and (first == key or key in keywords)
+
         if name == "trigger" and "availableNow" in keywords:
-            return "run_bounded"
-        if name in ("option", "options") and (
-            first == "checkpointLocation" or "checkpointLocation" in keywords
-        ):
-            return "run_bounded"
+            return ("run_bounded",)
+        if option("checkpointLocation"):
+            return ("run_bounded",)
         if name == "mkdtemp":
-            return "scratch_dir"
-        if name in ("option", "options") and (
-            first == "maxFilesPerTrigger" or "maxFilesPerTrigger" in keywords
-        ):
-            return "read_replay"
+            return ("scratch_dir",)
+        if option("maxFilesPerTrigger") or option("recursiveFileLookup"):
+            return ("read_replay",)
         if name == "utime":
-            return "write_replay"
+            return ("write_replay",)
+        if name == "mode" and first == "append":
+            return ()
         return None
 
     root = pathlib.Path(pkg.__file__).parent
@@ -1084,7 +1152,8 @@ def test_bounded_runs_and_scratch_dirs_are_defined_once():
 
     def visit(node, path, fn):
         for child in ast.iter_child_nodes(node):
-            if isinstance(child, ast.Call) and owner(child) not in (None, fn):
+            allowed = owners(child)
+            if allowed is not None and fn not in allowed:
                 offenders.append(f"{path}:{child.lineno} ({fn})")
             inner = child.name if isinstance(child, ast.FunctionDef) else fn
             visit(child, path, inner)
